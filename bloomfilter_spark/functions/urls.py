@@ -40,7 +40,10 @@ def normalize_url(url: Column | str) -> Column:
     )
     userinfo = F.regexp_extract(authority, r"^([^/?#]*@)", 1)
     hostport = F.lower(F.regexp_replace(authority, r"^[^/?#]*@", ""))
-    prefix = F.concat(scheme, F.lit("://"), userinfo, hostport)
+    # a scheme-less URL has no authority either: its prefix is empty
+    prefix = F.when(
+        scheme != "", F.concat(scheme, F.lit("://"), userinfo, hostport)
+    ).otherwise(F.lit(""))
     rest = F.regexp_replace(u, _PREFIX_RE, "")
     # 3. default ports (scheme is lowercase already)
     prefix = F.when(

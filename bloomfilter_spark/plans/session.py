@@ -3,13 +3,55 @@
 Local-mode defaults match the sandbox (local[$SPARK_GRAFT_CPUS]); on a real
 cluster every setting here is safe to keep. Arrow transfer is mandatory —
 all our UDFs are pandas/Arrow-vectorized (input_hint: no per-row Python).
+Python workers run under plans/daemon.py whenever its guard holds.
 """
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
+
+log = logging.getLogger("bloomfilter_spark")
+
+_PYTHONPATH = "spark.executorEnv.PYTHONPATH"
+
+
+def _daemon_conf(master: str, pythonpath: str | None) -> dict:
+    """Conf that runs Python workers under plans/daemon.py, or {} (and one
+    WARNING) when its guard fails.
+
+    The guard: PySpark 4.1.x, whose ``pyspark.worker.setup_spark_files`` the
+    daemon wraps, and a local master, so the package path on the driver is
+    also the path on the executors.  The SQL/Arrow path finds the daemon
+    module only through ``spark.executorEnv.PYTHONPATH``; without it the task
+    fails with "EOFException ... reading the port number".
+    """
+    import pyspark.worker
+
+    if not pyspark.__version__.startswith("4.1."):
+        why = f"PySpark {pyspark.__version__} is not 4.1.x"
+    elif not hasattr(pyspark.worker, "setup_spark_files"):
+        why = "pyspark.worker has no setup_spark_files"
+    elif not (master == "local" or master.startswith("local[")):
+        why = f"master {master!r} is not local"
+    else:
+        # the directory, or the --py-files zip, that holds the package
+        root = os.path.dirname(
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        )
+        paths = [root] + [p for p in (pythonpath or "").split(os.pathsep)
+                          if p and p != root]
+        return {
+            "spark.python.daemon.module": "bloomfilter_spark.plans.daemon",
+            _PYTHONPATH: os.pathsep.join(paths),
+        }
+    log.warning(
+        "bloomfilter_spark.plans.daemon not used (%s): every Python task "
+        "re-reads the zip archives on the worker's sys.path", why,
+    )
+    return {}
 
 
 def get_spark(
@@ -40,7 +82,9 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    conf.update(_daemon_conf(master, conf.get(_PYTHONPATH)))
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

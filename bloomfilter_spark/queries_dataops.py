@@ -1121,7 +1121,8 @@ WITH messy AS (
 ), parts AS (
   SELECT doc_id,
          lower(regexp_extract(u, '^([a-zA-Z][a-zA-Z0-9+.\-]*)://', 1))
-           || '://'
+           || CASE WHEN regexp_extract(u, '^([a-zA-Z][a-zA-Z0-9+.\-]*)://', 1)
+                        <> '' THEN '://' ELSE '' END
            || regexp_extract(authority, '^([^/?#]*@)', 1)
            || lower(regexp_replace(authority, '^[^/?#]*@', ''))
            AS prefix,

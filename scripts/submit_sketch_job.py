@@ -8,7 +8,9 @@ Run via scripts/run_spark_submit.sh, which ships the library as a
   1. reads (or generates+caches) the Common-Crawl-style pages table,
   2. builds the full sketch suite in ONE scan (operators/pipeline.py),
      optionally checkpointed (--ckpt-dir → resumable),
-  3. prints one JSON line: rows, wall seconds, docs/sec, sketch stats.
+  3. prints one JSON line: rows, wall seconds, docs/sec, sketch stats, and
+     the module of the per-task file set-up the Python workers ran
+     (bloomfilter_spark.plans.daemon when get_spark's fast path is live).
 
 The same script at --cores 8 vs --cores 32 is the N→4N scaling-efficiency
 evidence recorded in BENCH.md.
@@ -38,25 +40,19 @@ def main() -> None:
                          "128m default is fine)")
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
+    from bloomfilter_spark.plans.session import get_spark
 
-    builder = SparkSession.builder.appName("bloomfilter-suite-job")
-    if args.master:
-        builder = builder.master(args.master)
-    elif args.cores:
-        builder = builder.master(f"local[{args.cores}]")
-    shuffle = args.cores or 32
-    spark = (
-        builder.config("spark.sql.shuffle.partitions", str(shuffle))
-        .config("spark.sql.files.maxPartitionBytes", args.max_partition_bytes)
-        .config("spark.sql.files.openCostInBytes", "1m")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .getOrCreate()
+    # the library's one session rule; under --py-files the package (and so
+    # the Python daemon module get_spark switches on) lives in the zip
+    spark = get_spark(
+        app_name="bloomfilter-suite-job",
+        master=args.master or (f"local[{args.cores}]" if args.cores else None),
+        shuffle_partitions=args.cores,
+        extra_conf={
+            "spark.sql.files.maxPartitionBytes": args.max_partition_bytes,
+            "spark.sql.files.openCostInBytes": "1m",
+        },
     )
-    spark.sparkContext.setLogLevel("WARN")
 
     from bloomfilter_spark.operators.pipeline import (
         build_suite,
@@ -74,17 +70,21 @@ def main() -> None:
 
     # warm the python-worker pool (worker spawn + numpy/pandas import is
     # ~1s/worker; a real long-running cluster pays this once, not per job)
+    # and ask each worker which per-task file set-up it runs
     par = spark.sparkContext.defaultParallelism
 
-    def _noop(it):
-        import numpy  # noqa: F401
+    def _warm(it):
+        import pandas as pd
+        import pyspark.worker
 
-        for pdf in it:
-            yield pdf
+        for _ in it:
+            pass
+        yield pd.DataFrame({"m": [pyspark.worker.setup_spark_files.__module__]})
 
-    spark.range(0, par * 4, numPartitions=par * 4).mapInPandas(
-        _noop, schema="id long"
-    ).count()
+    worker_setup = sorted({
+        r.m for r in spark.range(0, par * 4, numPartitions=par * 4)
+        .mapInPandas(_warm, schema="m string").collect()
+    })
 
     t0 = time.perf_counter()
     if args.ckpt_dir:
@@ -114,6 +114,7 @@ def main() -> None:
         "wall_sec": round(wall, 3),
         "docs_per_sec": round(n_rows / wall, 1),
         "parallelism": spark.sparkContext.defaultParallelism,
+        "worker_setup_spark_files": worker_setup,
         "sketches": sorted(suite),
         "bloom_fpp_est": round(suite["bloom_url"].estimated_fpp(), 6),
     }

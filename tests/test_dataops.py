@@ -1198,6 +1198,7 @@ def test_normalize_url_rules(spark):
         "http://ex.com/p?utm_x=1": "http://ex.com/p",          # all tracked
         "ftp://Ex.com:80/f": "ftp://ex.com:80/f",              # :80 only for http
         "http://user:pw@Ex.com/x": "http://user:pw@ex.com/x",
+        "example.com/a/": "example.com/a",                    # no scheme
     }
     df = spark.createDataFrame([(u,) for u in cases], "url string")
     got = df.select("url", normalize_url("url").alias("c")).toPandas()
@@ -1212,6 +1213,7 @@ def test_normalize_url_rules(spark):
         "http://ex.com/p?utm_x=1": "ex.com",
         "ftp://Ex.com:80/f": "ex.com",
         "http://user:pw@Ex.com/x": "ex.com",
+        "example.com/a/": "",
     }
     for _, r in hosts.iterrows():
         assert r["h"] == want_hosts[r["url"]], (r["url"], r["h"])
