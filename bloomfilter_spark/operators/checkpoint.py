@@ -5,19 +5,25 @@ lineage + metrics" — a killed job must resume without re-scanning completed
 input splits, and the final sketch must be bit-identical to an uninterrupted
 build.
 
-Mechanism: each build task writes its partition's partial sketch blob to
+Mechanism: each fold task writes its partition's partial sketch blob to
 ``<ckpt_dir>/partial-<pid>.bin`` (tmp-file + atomic rename — a crashed task
 leaves no half-written partial) plus a ``lineage-<pid>.json`` sidecar with
-counters (rows, input_bytes, wall_ms, sketch header).  On resume, a task
-whose partial already exists yields it WITHOUT consuming its input iterator
-— mapInPandas pulls Arrow batches lazily, so the parquet/Iceberg split is
-never actually read.  The merge stage always reads the complete set of
-partials in sorted-partition order (deterministic n-ary merge ⇒
-bit-identical results whether the build ran once or resumed five times).
+counters (rows, input_bytes, wall_ms, sketch header).  The resume decision
+is the driver's (`fold_pending`): it lists the durable partials first and
+launches the fold job over the pending partition ids only, so a finished
+partition gets no task at all — its split is never scheduled, never read,
+and no Python worker is spent on it.  A build with nothing pending runs no
+fold job.  The merge stage always reads the complete set of partials in
+sorted-partition order (deterministic n-ary merge ⇒ bit-identical results
+whether the build ran once or resumed five times).
 
 Correctness requirements on the caller:
-- the input DataFrame's partitioning must be deterministic across runs
-  (true for a parquet/Iceberg scan of an immutable table with fixed conf);
+- the input DataFrame's partitioning must be split-stable across runs:
+  partition i must hold the same rows every time.  A parquet/Iceberg scan
+  of an immutable table with fixed conf qualifies.  Salted or shuffled
+  output (plans/skew.salted_repartition) qualifies only when its source is
+  such a scan, and then a pending partition still re-runs the whole
+  upstream map stage (the shuffle needs every input split);
 - ckpt_dir must be shared storage on a real cluster (HDFS/S3/NFS); local
   filesystem suffices for local[N].
 
@@ -53,6 +59,54 @@ def _atomic_write(path: str, data: bytes) -> None:
     os.replace(tmp, path)
 
 
+def partial_path(ckpt_dir: str, pid: int) -> str:
+    return os.path.join(ckpt_dir, f"partial-{pid:06d}.bin")
+
+
+def _durable_partials(ckpt_dir: str) -> set[int]:
+    # tmp files of an unfinished write end in ".tmp.<pid>", not ".bin"
+    return {
+        int(name[len("partial-"):-len(".bin")])
+        for name in os.listdir(ckpt_dir)
+        if name.startswith("partial-") and name.endswith(".bin")
+    }
+
+
+def fold_pending(stats: DataFrame, ckpt_dir: str, n_parts: int) -> DataFrame:
+    """Run the fold job over the partitions that have no durable partial.
+
+    `stats` is the checkpointing fold: one STATS_SCHEMA row per partition,
+    written by a task that folds its whole split and then leaves
+    partial-<pid>.bin behind.  The driver lists the partials first and
+    launches `stats` over the pending partition ids only; a task keeps its
+    partition's original id, so partial names and the merge order are the
+    same as in an uninterrupted build.  Nothing pending ⇒ no job.  Finished
+    partitions get their lineage row here (rows/input_bytes = -1,
+    resumed=True), so no task is spent on them and their splits are never
+    scheduled.
+
+    Returns the lineage DataFrame, one row per partition in id order.
+    Raises RuntimeError when a partial is still missing after the job."""
+    spark = stats.sparkSession
+    done = _durable_partials(ckpt_dir)
+    pending = [pid for pid in range(n_parts) if pid not in done]
+    recs = [(pid, -1, -1, 0.0, True) for pid in range(n_parts) if pid in done]
+    if pending:
+        # runs the job; raises if a task fails.  A Row is a tuple in
+        # STATS_SCHEMA field order.
+        rows = spark.sparkContext.runJob(
+            stats.rdd, lambda it: it, partitions=pending
+        )
+        recs += [tuple(r) for r in rows]
+        missing = set(range(n_parts)) - _durable_partials(ckpt_dir)
+        if missing:
+            raise RuntimeError(
+                "checkpoint incomplete: missing partials for partitions "
+                f"{sorted(missing)}"
+            )
+    return spark.createDataFrame(sorted(recs), schema=STATS_SCHEMA)
+
+
 def build_sketch_checkpointed(
     df: DataFrame,
     cols: list[str] | str,
@@ -61,6 +115,11 @@ def build_sketch_checkpointed(
     fail_on: Callable[[int], bool] | None = None,
 ):
     """Build a sketch with per-partition checkpointing.
+
+    A rerun into the same ckpt_dir folds only the partitions without a
+    partial (`fold_pending`); the partials are then merged on the driver.
+    The input's partitioning must be split-stable across runs (see the
+    module docstring).
 
     Returns (sketch, lineage DataFrame).  `fail_on(pid)` is a test hook: a
     task whose partition satisfies it raises mid-build (simulating a kill),
@@ -99,19 +158,6 @@ def build_sketch_checkpointed(
 
         ctx = TaskContext.get()
         pid = ctx.partitionId() if ctx is not None else 0
-        blob_path = os.path.join(ckpt_dir, f"partial-{pid:06d}.bin")
-        if os.path.exists(blob_path):
-            # resume fast-path: input iterator NOT consumed → split not read
-            yield pd.DataFrame(
-                {
-                    "partition_id": [pid],
-                    "rows": [-1],
-                    "input_bytes": [-1],
-                    "wall_ms": [0.0],
-                    "resumed": [True],
-                }
-            )
-            return
         if fail_on is not None and fail_on(pid):
             raise RuntimeError(f"injected failure in partition {pid}")
         t0 = time.perf_counter()
@@ -124,7 +170,7 @@ def build_sketch_checkpointed(
             rows += len(pdf)
             nbytes += int(pdf.memory_usage(deep=False).sum())
         wall_ms = (time.perf_counter() - t0) * 1000.0
-        _atomic_write(blob_path, sk.to_bytes())
+        _atomic_write(partial_path(ckpt_dir, pid), sk.to_bytes())
         _atomic_write(
             os.path.join(ckpt_dir, f"lineage-{pid:06d}.json"),
             json.dumps(
@@ -149,8 +195,9 @@ def build_sketch_checkpointed(
             }
         )
 
-    stats = pruned.mapInPandas(build_iter, schema=STATS_SCHEMA)
-    stats_pdf = stats.toPandas()  # runs the job; raises if a task fails
+    lineage = fold_pending(
+        pruned.mapInPandas(build_iter, schema=STATS_SCHEMA), ckpt_dir, n_parts
+    )
 
     # merge: complete partial set, sorted order → deterministic.  The
     # commutative path STREAMS (open → merge → discard): memory stays at
@@ -160,12 +207,7 @@ def build_sketch_checkpointed(
     # are KB-sized (KLL/t-digest), and the one-shot order is the pinned
     # determinism contract.
     def _read(pid: int):
-        path = os.path.join(ckpt_dir, f"partial-{pid:06d}.bin")
-        if not os.path.exists(path):
-            raise RuntimeError(
-                f"checkpoint incomplete: missing partial for partition {pid}"
-            )
-        with open(path, "rb") as f:
+        with open(partial_path(ckpt_dir, pid), "rb") as f:
             return serde.deserialize(f.read())
 
     acc = factory()
@@ -175,7 +217,6 @@ def build_sketch_checkpointed(
         for pid in range(n_parts):
             acc.merge(_read(pid))
 
-    lineage = df.sparkSession.createDataFrame(stats_pdf, schema=STATS_SCHEMA)
     return acc, lineage
 
 

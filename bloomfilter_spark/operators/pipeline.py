@@ -32,6 +32,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 
+from bloomfilter_spark.functions.urls import host_of
 from bloomfilter_spark.operators.build import (
     bloom_factory,
     cms_factory,
@@ -168,18 +169,23 @@ def build_multi_checkpointed(
     resume contract on the path that actually runs at 100 TB (a killed
     8-sketch suite build must NOT rescan completed splits).
 
-    Each task atomically writes `partial-<pid>.bin` (all of its sketches'
-    zlib partial blobs in one file) plus a lineage sidecar; on resume a task
-    whose partial exists yields stats WITHOUT consuming its input iterator,
-    so the parquet split is never read.  The merge stage reloads the
-    partials as a DataFrame (binaryFile source — never a driver glob-read
-    of 800k blobs) and reduces them through the same deterministic
-    bounded-fan-in tree as build_multi, so an interrupted-then-resumed
-    build is bit-identical to an uninterrupted one.
+    Each fold task atomically writes `partial-<pid>.bin` (all of its
+    sketches' zlib partial blobs in one file) plus a lineage sidecar.  On
+    resume the driver lists the partials and runs the fold over the pending
+    partitions only (checkpoint.fold_pending): a finished partition gets no
+    task, so its split is never read, and nothing pending means no fold
+    job.  The merge then reads every partial.  With n_parts ≤ the final
+    fan-in the driver opens them itself and runs the same n-ary merge
+    build_multi's driver step runs (no Spark job); above it the partials
+    are reloaded as a DataFrame (binaryFile source — never a driver
+    glob-read of 800k blobs) and reduced through the same deterministic
+    bounded-fan-in tree as build_multi.  Either way an
+    interrupted-then-resumed build is bit-identical to an uninterrupted one.
 
     Returns (name -> merged sketch, lineage DataFrame).  Same caller
-    contract as build_sketch_checkpointed: deterministic input partitioning
-    across runs, ckpt_dir on shared storage.
+    contract as build_sketch_checkpointed: split-stable input partitioning
+    across runs (a parquet/Iceberg scan; salted output only over such a
+    scan), ckpt_dir on shared storage.
 
     input_pin: opaque identifier of the immutable input version — for an
     Iceberg source, the snapshot id (sources.tables.current_snapshot_id);
@@ -198,6 +204,8 @@ def build_multi_checkpointed(
     from bloomfilter_spark.operators.checkpoint import (
         STATS_SCHEMA,
         _atomic_write,
+        fold_pending,
+        partial_path,
     )
     from bloomfilter_spark.plans.skew import ensure_parallelism
 
@@ -254,19 +262,6 @@ def build_multi_checkpointed(
 
         ctx = TaskContext.get()
         pid = ctx.partitionId() if ctx is not None else 0
-        blob_path = os.path.join(ckpt_dir, f"partial-{pid:06d}.bin")
-        if os.path.exists(blob_path):
-            # resume fast-path: input iterator NOT consumed → split not read
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "partition_id": [pid],
-                    "rows": [-1],
-                    "input_bytes": [-1],
-                    "wall_ms": [0.0],
-                    "resumed": [True],
-                }
-            )
-            return
         if fail_on is not None and fail_on(pid):
             raise RuntimeError(f"injected failure in partition {pid}")
         t0 = time.perf_counter()
@@ -284,7 +279,7 @@ def build_multi_checkpointed(
             {"rows": rows, "blobs": {n: _pack(sks[n]) for n in names}},
             protocol=4,
         )
-        _atomic_write(blob_path, payload)
+        _atomic_write(partial_path(ckpt_dir, pid), payload)
         _atomic_write(
             os.path.join(ckpt_dir, f"lineage-{pid:06d}.json"),
             json.dumps(
@@ -308,18 +303,18 @@ def build_multi_checkpointed(
             }
         )
 
-    stats_pdf = (
-        pruned.mapInArrow(build_iter, schema=STATS_SCHEMA).toPandas()
-    )  # runs the job; raises if a task fails
+    lineage = fold_pending(
+        pruned.mapInArrow(build_iter, schema=STATS_SCHEMA), ckpt_dir, n_parts
+    )
 
-    done = [
-        f for f in os.listdir(ckpt_dir)
-        if f.startswith("partial-") and f.endswith(".bin")
-    ]
-    if len(done) != n_parts:
-        raise RuntimeError(
-            f"checkpoint incomplete: {len(done)}/{n_parts} partials present"
-        )
+    if n_parts <= (fanin if fanin is not None else DEFAULT_FANIN):
+        # the tree would have no distributed round: its driver step is this
+        # same n-ary merge over ≤ fan-in partials, so skip the reload job
+        recs = []
+        for pid in range(n_parts):
+            with open(partial_path(ckpt_dir, pid), "rb") as f:
+                recs.append({"partition_id": pid, **pickle.load(f)["blobs"]})
+        return _nary_merge_pdf(pd.DataFrame(recs), names, factories), lineage
 
     blob_cols = ", ".join(f"`{n}` binary" for n in names)
     schema = f"partition_id long, {blob_cols}, rows long"
@@ -349,7 +344,6 @@ def build_multi_checkpointed(
     merged = _merge_tree(
         partials, schema, names, factories, n_parts, fanin, merge_par
     )
-    lineage = spark.createDataFrame(stats_pdf, schema=STATS_SCHEMA)
     return merged, lineage
 
 
@@ -486,10 +480,10 @@ def with_page_features(df: DataFrame, prehash: bool = False) -> DataFrame:
     base = df.select(
         "url",
         "lang",
-        # no trailing-slash requirement: a bare-domain url
-        # ('https://example.com') must keep its host — requiring '/'
-        # would lump every such url under host '' in the host sketches
-        F.regexp_extract("url", r"^https?://([^/?#]+)", 1).alias("host"),
+        # the library's one host rule: lowercased, no port, no userinfo, so
+        # 'https://u@Example.com:443/' and 'https://example.com' count as
+        # one host in the host sketches
+        host_of("url").alias("host"),
         F.length("text").alias("text_len"),
         F.xxhash64("text").alias("text_hash"),
     )

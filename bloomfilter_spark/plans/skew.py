@@ -25,7 +25,14 @@ def salted_repartition(
     them uniformly, costs nothing per row (no wide-column hashing), and
     stays deterministic GIVEN the source's split layout (a checkpoint
     resume re-reading the same parquet splits reproduces the same
-    partition contents; no rand())."""
+    partition contents; no rand()).
+
+    Checkpointed builds need split-stable input partitioning, so salted
+    output only qualifies as their input when its source is a plain
+    parquet or Iceberg scan: over any other source the row positions, and
+    with them the salts, can move between runs.  Even then a resume that
+    has a pending partition re-runs the whole scan, because the shuffle
+    needs every input split."""
     salt = F.pmod(F.monotonically_increasing_id(), F.lit(salts)).alias("_salt")
     return (
         df.withColumn("_salt", salt)

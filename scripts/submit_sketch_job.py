@@ -7,10 +7,13 @@ Run via scripts/run_spark_submit.sh, which ships the library as a
 
   1. reads (or generates+caches) the Common-Crawl-style pages table,
   2. builds the full sketch suite in ONE scan (operators/pipeline.py),
-     optionally checkpointed (--ckpt-dir → resumable),
-  3. prints one JSON line: rows, wall seconds, docs/sec, sketch stats, and
-     the module of the per-task file set-up the Python workers ran
-     (bloomfilter_spark.plans.daemon when get_spark's fast path is live).
+     optionally checkpointed (--ckpt-dir → build_multi_checkpointed; a
+     rerun into the same dir folds only the partitions without a partial),
+  3. prints one JSON line: rows, wall seconds, docs/sec, sketch stats, the
+     module of the per-task file set-up the Python workers ran
+     (bloomfilter_spark.plans.daemon when get_spark's fast path is live),
+     and with --ckpt-dir the resumed and folded partition counts read from
+     the checkpoint lineage.
 
 The same script at --cores 8 vs --cores 32 is the N→4N scaling-efficiency
 evidence recorded in BENCH.md.
@@ -87,17 +90,18 @@ def main() -> None:
     })
 
     t0 = time.perf_counter()
+    partitions = None
     if args.ckpt_dir:
-        from bloomfilter_spark.operators.checkpoint import (
-            build_sketch_checkpointed,
-        )
-        from bloomfilter_spark.operators.build import bloom_factory
+        from bloomfilter_spark.operators.pipeline import build_multi_checkpointed
 
-        sketch, lineage = build_sketch_checkpointed(
-            pages, "url", bloom_factory(max(1024, n_rows), 0.01), args.ckpt_dir
+        suite, lineage = build_multi_checkpointed(
+            with_page_features(pages), pages_suite_specs(n_rows), args.ckpt_dir
         )
-        suite = {"bloom_url": sketch}
-        lineage.collect()
+        resumed = lineage.toPandas()["resumed"]
+        partitions = {
+            "resumed": int(resumed.sum()),
+            "folded": int((~resumed).sum()),
+        }
     else:
         df = pages
         if args.salts:
@@ -118,8 +122,9 @@ def main() -> None:
         "sketches": sorted(suite),
         "bloom_fpp_est": round(suite["bloom_url"].estimated_fpp(), 6),
     }
-    if "hll_url" in suite:
-        out["hll_url_est"] = round(suite["hll_url"].estimate(), 1)
+    out["hll_url_est"] = round(suite["hll_url"].estimate(), 1)
+    if partitions is not None:
+        out["partitions"] = partitions
     print(json.dumps(out))
     sys.stdout.flush()
     spark.stop()

@@ -5,6 +5,7 @@ bit-identical to an uninterrupted build."""
 from __future__ import annotations
 
 import os
+import time
 
 import pytest
 
@@ -107,10 +108,13 @@ def test_full_resume_no_rescan(spark, pages, tmp_path):
     assert sk1.to_bytes() == sk2.to_bytes()
 
 
-def test_build_multi_kill_and_resume_bit_identical(spark, pages, tmp_path):
+@pytest.mark.parametrize("fanin", [None, 2])
+def test_build_multi_kill_and_resume_bit_identical(spark, pages, tmp_path, fanin):
     """The SUITE path (one-scan multi-sketch) must honor the same resume
     contract: kill mid-build → resume → every sketch bit-identical to an
-    uninterrupted build_multi, completed splits never re-scanned."""
+    uninterrupted build_multi, completed splits never re-scanned.  fanin=2
+    over 8 partitions takes the partial-reload path with distributed merge
+    rounds; fanin=None merges the 8 partials on the driver."""
     from bloomfilter_spark.operators.build import hll_factory, tdigest_factory
     from bloomfilter_spark.operators.pipeline import (
         build_multi,
@@ -130,14 +134,14 @@ def test_build_multi_kill_and_resume_bit_identical(spark, pages, tmp_path):
     for _ in range(5):  # see test_kill_and_resume_bit_identical on retries
         with pytest.raises(Exception):
             build_multi_checkpointed(
-                feats, specs, ckpt, fail_on=lambda pid: pid >= 4
+                feats, specs, ckpt, fanin=fanin, fail_on=lambda pid: pid >= 4
             )
         done1 = _settled_partials(ckpt)
         if done1:
             break
     assert done1 and done1 <= {0, 1, 2, 3}
 
-    merged, lineage = build_multi_checkpointed(feats, specs, ckpt)
+    merged, lineage = build_multi_checkpointed(feats, specs, ckpt, fanin=fanin)
     lin = lineage.toPandas().set_index("partition_id")
     assert set(lin.index) == set(range(8))
     for pid in done1:
@@ -145,15 +149,128 @@ def test_build_multi_kill_and_resume_bit_identical(spark, pages, tmp_path):
     for pid in set(range(8)) - done1:
         assert bool(lin.loc[pid, "resumed"]) is False
 
-    direct = build_multi(feats, specs)
+    direct = build_multi(feats, specs, fanin=fanin)
     for name in specs:
         assert merged[name].to_bytes() == direct[name].to_bytes(), name
 
     # third run: everything resumes, and the result is still identical
-    merged2, lineage2 = build_multi_checkpointed(feats, specs, ckpt)
+    merged2, lineage2 = build_multi_checkpointed(feats, specs, ckpt, fanin=fanin)
     assert lineage2.toPandas().resumed.all()
     for name in specs:
         assert merged2[name].to_bytes() == direct[name].to_bytes(), name
+
+
+def _writer(kind: str):
+    """(df, ckpt_dir) -> merged bytes, lineage, for each checkpoint writer."""
+    from bloomfilter_spark.operators.pipeline import build_multi_checkpointed
+
+    factory = bloom_factory(2048, 0.01)
+    if kind == "sketch":
+        def build(df, ckpt):
+            sk, lineage = build_sketch_checkpointed(df, "url", factory, ckpt)
+            return sk.to_bytes(), lineage
+    else:
+        def build(df, ckpt):
+            merged, lineage = build_multi_checkpointed(
+                df, {"bloom_url": ("url", factory)}, ckpt
+            )
+            return merged["bloom_url"].to_bytes(), lineage
+    return build
+
+
+def _tasks_launched(spark, build):
+    """Run build() in its own job group; return (result, tasks launched)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"ckpt-test-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status store is fed by the listener bus: drain it before reading
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    st = sc.statusTracker()
+    tasks = sum(
+        st.getStageInfo(sid).numTasks
+        for jid in st.getJobIdsForGroup(group)
+        for sid in st.getJobInfo(jid).stageIds
+    )
+    return out, tasks
+
+
+def _worker_pids(spark) -> set[int]:
+    """PIDs of the idle Python workers, seen by mapInArrow tasks that run
+    side by side; rounds repeat until one shows no new worker."""
+    par = spark.sparkContext.defaultParallelism
+
+    def pid_of(batches):
+        import pyarrow as pa
+
+        for _ in batches:
+            pass
+        time.sleep(0.2)  # hold this worker while the round's others start
+        yield pa.RecordBatch.from_pydict({"pid": [os.getpid()]})
+
+    seen: set[int] = set()
+    for _ in range(8):
+        got = {
+            r.pid
+            for r in spark.range(par, numPartitions=par)
+            .mapInArrow(pid_of, "pid long")
+            .collect()
+        }
+        if got <= seen:
+            break
+        seen |= got
+    return seen
+
+
+def _alive(pid: int) -> bool:
+    try:
+        with open(f"/proc/{pid}/stat") as f:
+            return f.read().rsplit(")", 1)[1].split()[0] != "Z"
+    except FileNotFoundError:
+        return False
+
+
+@pytest.mark.parametrize("kind", ["sketch", "multi"])
+def test_full_resume_launches_no_task_and_keeps_workers(
+    spark, pages, tmp_path, kind
+):
+    """A resume with every partial present runs no Spark job, so no split
+    is scheduled and no Python worker is spent (a task that returns without
+    draining its Arrow input makes PySpark kill its worker)."""
+    build = _writer(kind)
+    ckpt = str(tmp_path / "full")
+    first, _ = build(pages, ckpt)
+    before = _worker_pids(spark)
+    (again, lineage), tasks = _tasks_launched(spark, lambda: build(pages, ckpt))
+    assert tasks == 0
+    assert again == first
+    lin = lineage.toPandas()
+    assert lin.partition_id.tolist() == list(range(8))
+    assert lin.resumed.all() and (lin.rows == -1).all()
+    time.sleep(1.0)  # a worker told not to be reused exits after its task
+    assert {p for p in before if not _alive(p)} == set()
+
+
+@pytest.mark.parametrize("kind", ["sketch", "multi"])
+def test_partial_resume_folds_only_pending(spark, pages, tmp_path, kind):
+    """k of n partials present ⇒ exactly n−k fold tasks, and the result is
+    bit-identical to the uninterrupted build."""
+    build = _writer(kind)
+    ckpt = str(tmp_path / "partial")
+    first, _ = build(pages, ckpt)
+    lost = {1, 4, 6}
+    for pid in lost:
+        os.remove(os.path.join(ckpt, f"partial-{pid:06d}.bin"))
+    (again, lineage), tasks = _tasks_launched(spark, lambda: build(pages, ckpt))
+    assert tasks == len(lost)
+    assert again == first
+    lin = lineage.toPandas().set_index("partition_id")
+    assert set(lin.index[~lin.resumed]) == lost
 
 
 def test_build_multi_manifest_guard(spark, pages, tmp_path):

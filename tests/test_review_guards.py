@@ -215,13 +215,20 @@ def test_page_features_keep_bare_domain_host(spark):
     df = spark.createDataFrame(
         [("https://example.com", "x", "en"),
          ("https://a.example.com/p/1", "y", "en"),
-         ("http://b.example.com?q=1", "z", "en")],
+         ("http://b.example.com?q=1", "z", "en"),
+         # port, userinfo and case are not part of the host
+         ("https://example.com:443/x", "p", "en"),
+         ("https://user:pw@example.com/y", "u", "en"),
+         ("https://Example.COM/z", "c", "en")],
         "url string, text string, lang string",
     )
     got = with_page_features(df).select("url", "host").toPandas().set_index("url")
     assert got.loc["https://example.com", "host"] == "example.com"
     assert got.loc["https://a.example.com/p/1", "host"] == "a.example.com"
     assert got.loc["http://b.example.com?q=1", "host"] == "b.example.com"
+    assert got.loc["https://example.com:443/x", "host"] == "example.com"
+    assert got.loc["https://user:pw@example.com/y", "host"] == "example.com"
+    assert got.loc["https://Example.COM/z", "host"] == "example.com"
 
 
 def test_tree_aggregate_many_partitions_matches_local(spark):
