@@ -82,9 +82,14 @@ def host_of(url: Column | str) -> Column:
     stops at ':' (the port separator), which would truncate
     'http://[2001:db8::1]/x' to '[2001'."""
     u = F.col(url) if isinstance(url, str) else url
-    bracketed = F.regexp_extract(
-        u, r"^[a-zA-Z][a-zA-Z0-9+.\-]*://([^/?#@]*@)?(\[[^\]/?#]*\])", 2
-    )
+    # the bracket regex can only match a row containing '[': skip it on the
+    # rest, which is nearly every row
+    bracketed = F.when(
+        u.contains("["),
+        F.regexp_extract(
+            u, r"^[a-zA-Z][a-zA-Z0-9+.\-]*://([^/?#@]*@)?(\[[^\]/?#]*\])", 2
+        ),
+    ).otherwise("")
     # userinfo may itself contain ':' (user:password@) — only '/?#@' end it
     plain = F.regexp_extract(
         u, r"^[a-zA-Z][a-zA-Z0-9+.\-]*://([^/?#@]*@)?([^/?#:]*)", 2

@@ -1,21 +1,17 @@
-"""Distributed sketch build/merge — the library's UDAF surface.
+"""Single-sketch builds, grouped sketches and rollups — the library's UDAF
+surface over the one build engine (operators/pipeline.py).
 
-Lifecycle (SURVEY.md §3.4):
-  1. partial build: mapInPandas over Arrow batches — each task folds its
-     partition into one partition-local sketch (the Spark replacement for
-     the reference's shared-mutable CAS array,
-     /root/reference/bloomfilter.go:352-383) and emits one blob row with
-     counters (rows, bytes, wall_ms).
-  2. merge: associative combine of blobs —
-       * commutative sketches (Bloom OR / HLL max / CMS sum): treeAggregate
-         over the blob RDD, depth-2 merge tree, bit-identical regardless of
-         merge order (the north rule's associativity requirement);
-       * compaction sketches (KLL / t-digest): single n-ary merge_all of all
-         partial blobs, which is a pure function of the *multiset* of
-         partials (see sketches/kll.py docstring) — partial blobs are a few
-         KB each, so the n-ary combine scales to tens of thousands of
-         partitions.
-  3. finalize: stats()/estimate()/quantile() on the merged sketch.
+`build_sketch`, `build_sketch_weighted` and `build_sketch_with_deletes` are
+one-spec calls of `pipeline.build_multi`: an Arrow fold per partition, zlib
+partials, a deterministic bounded-fan-in merge tree and a driver merge
+(SURVEY.md §3.4 lifecycle: partial build → associative merge → finalize).
+A weighted build is a spec with a weight column; a counting-Bloom build
+with deletes is the same spec over a signed-delta stream.
+
+Grouped sketches (`build_grouped`) fold one sketch per key with a
+groupBy/applyInPandas; the rollups merge those per-key blobs into coarser
+groups, trailing windows, or one sketch (`rollup_grouped`, which reduces
+through the engine's merge tree).
 
 All hashing/bit-setting is vectorized numpy inside the UDF; no per-row
 Python anywhere (input_hint, BASELINE.json:15).
@@ -23,8 +19,7 @@ Python anywhere (input_hint, BASELINE.json:15).
 
 from __future__ import annotations
 
-import time
-from typing import Callable, Iterator
+from typing import Callable
 
 import pandas as pd
 
@@ -40,23 +35,8 @@ from bloomfilter_spark.sketches.ddsketch import DDSketch
 from bloomfilter_spark.sketches.tdigest import TDigest
 from bloomfilter_spark.sketches.theta import ThetaSketch
 
-# kinds whose pairwise merge is commutative+associative (safe for any tree)
-_COMMUTATIVE_KINDS = {
-    serde.KIND_BLOOM,
-    serde.KIND_HLL,
-    serde.KIND_CMS,
-    serde.KIND_THETA,  # pure function of the distinct-hash set
-    serde.KIND_CBF,  # element-wise signed counter sum
-    serde.KIND_DDS,  # bucket-wise counter sum
-    serde.KIND_BBLOOM,  # blocked layout: same bitwise-OR merge as Bloom
-}
-
-# max blobs any single merge task (or the driver) holds at once
-DEFAULT_MERGE_FANIN = 64
-
-PARTIAL_SCHEMA = (
-    "partition_id long, blob binary, rows long, input_bytes long, wall_ms double"
-)
+# max partial blobs any single merge task (or the driver) holds at once
+DEFAULT_FANIN = 64
 
 
 def _numeric_update(sketch, series: pd.Series) -> None:
@@ -67,241 +47,26 @@ def _numeric_update(sketch, series: pd.Series) -> None:
         sketch.update(series.dropna())
 
 
-def partial_build(
-    df: DataFrame,
-    cols: list[str] | str,
-    factory: Callable[[], object],
-    weight_col: str | None = None,
-) -> DataFrame:
-    """One blob row per input partition: (partition_id, blob, rows,
-    input_bytes, wall_ms). Column pruning: we select only `cols` (plus
-    weight_col when set), so the parquet scan reads nothing else.
-
-    weight_col: each key row contributes its weight instead of 1 (CMS
-    weighted updates); only valid with a single key column."""
-    if isinstance(cols, str):
-        cols = [cols]
-    if weight_col is not None and len(cols) != 1:
-        raise ValueError("weighted build takes exactly one key column")
-    pruned = df.select(*cols, *([weight_col] if weight_col else []))
-
-    def build_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        t0 = time.perf_counter()
-        sk = factory()
-        rows = 0
-        nbytes = 0
-        for pdf in batches:
-            if weight_col is not None:
-                clean = pdf.dropna(subset=[cols[0]])
-                w = clean[weight_col].fillna(0)
-                if (w < 0).any():
-                    # negative weights would break the CMS overestimate-only
-                    # invariant (inner_product / point-query bounds)
-                    raise ValueError(
-                        f"weighted build: negative weight in '{weight_col}'"
-                    )
-                wr = w.round()
-                if not bool((wr == w).all()):
-                    # silent rounding would change the counted mass
-                    # (0.4 -> 0): integer counters need integer weights
-                    raise TypeError(
-                        f"weighted build: non-integer weights in "
-                        f"'{weight_col}' — scale to integer mass upstream "
-                        "(CMS counters are int64)"
-                    )
-                sk.update(clean[cols[0]], weights=wr.astype("int64"))
-            else:
-                for c in cols:
-                    _numeric_update(sk, pdf[c])
-            rows += len(pdf)
-            nbytes += int(pdf.memory_usage(deep=False).sum())
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else -1
-        yield pd.DataFrame(
-            {
-                "partition_id": [pid],
-                "blob": [sk.to_bytes()],
-                "rows": [rows],
-                "input_bytes": [nbytes],
-                "wall_ms": [(time.perf_counter() - t0) * 1000.0],
-            }
-        )
-
-    return pruned.mapInPandas(build_iter, schema=PARTIAL_SCHEMA)
-
-
-def _nary_merge(factory: Callable[[], object], sketches: list):
-    """Canonical n-ary combine: fresh accumulator, merge_all when the kind
-    supports it (multiset-deterministic), else sequential merge."""
-    acc = factory()
+def _merge_blobs(acc, blobs, load=serde.deserialize):
+    """Merge serialized sketches into `acc`.  Kinds with merge_all take the
+    whole list at once (their result is a pure function of the multiset,
+    and their blobs are KB-sized); every other kind merges and drops one
+    blob at a time, so a giant Bloom merge holds 2 sketches, not one per
+    blob."""
     if hasattr(acc, "merge_all"):
-        acc.merge_all(sketches)
+        acc.merge_all([load(b) for b in blobs])
     else:
-        for s in sketches:
-            acc.merge(s)
+        for b in blobs:
+            acc.merge(load(b))
     return acc
 
 
-def tree_merge_blobs(
-    partials: DataFrame,
-    factory: Callable[[], object],
-    n_parts: int,
-    fanin: int = DEFAULT_MERGE_FANIN,
-):
-    """Deterministic bounded-fan-in reduction of (partition_id, blob) rows —
-    no task or driver ever holds more than `fanin` blobs (at 100 TB /
-    128 MB splits P ≈ 800k partials; a driver collect() of KB-sized KLL
-    blobs would be GBs of driver heap).
+def build_sketch(df: DataFrame, col: str, factory: Callable[[], object]):
+    """Build one sketch over `col`: `build_multi` with a single spec.
+    Returns the merged sketch object."""
+    from bloomfilter_spark.operators.pipeline import build_multi
 
-    Bucket composition (pid // fanin) and intra-bucket merge order (sorted
-    pid) are pure functions of partition_id, so the result is a pure
-    function of the {(partition_id, blob)} set and the fanin — independent
-    of task scheduling, and reproducible driver-side (tree_merge_replay is
-    the pytest oracle).  For compaction sketches (KLL/t-digest) a tree of
-    n-ary merges is NOT bit-identical to one flat n-ary merge — the
-    intermediate compaction schedules differ; both honor the published
-    rank-error bound — so this canonical tree IS the defined merge semantic
-    at scale.  (Reference analog: Union as the only merge operator for any
-    fan-in topology, /root/reference/bloomfilter.go:196-216.)
-    """
-    from pyspark.sql import functions as F
-
-    level = partials.select("partition_id", "blob")
-    remaining = n_parts
-    while remaining > fanin:
-
-        def make_merge_bucket(step: int):
-            def merge_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-                pdf = pdf.sort_values("partition_id")
-                merged = _nary_merge(
-                    factory, [serde.deserialize(b) for b in pdf["blob"]]
-                )
-                return pd.DataFrame(
-                    {
-                        "partition_id": [int(pdf["partition_id"].min()) // step],
-                        "blob": [merged.to_bytes()],
-                    }
-                )
-
-            return merge_bucket
-
-        level = (
-            level.withColumn(
-                "_bucket", (F.col("partition_id") / fanin).cast("long")
-            )
-            .groupBy("_bucket")
-            .applyInPandas(
-                make_merge_bucket(fanin), schema="partition_id long, blob binary"
-            )
-        )
-        remaining = -(-remaining // fanin)
-
-    rows = level.collect()  # ≤ fanin rows by construction
-    rows = sorted(rows, key=lambda r: r.partition_id)
-    return _nary_merge(factory, [serde.deserialize(r.blob) for r in rows])
-
-
-def tree_merge_replay(
-    pairs: list[tuple[int, bytes]],
-    factory: Callable[[], object],
-    n_parts: int,
-    fanin: int = DEFAULT_MERGE_FANIN,
-):
-    """Driver-side replay of tree_merge_blobs' canonical tree — the
-    determinism oracle: the distributed result must be bit-identical.
-
-    n_parts is REQUIRED and must equal what the distributed side used
-    (partition count / n_buckets): the tree's round count is driven by
-    that DECLARED width, not the number of non-empty rows — defaulting to
-    len(pairs) would replay a shallower tree whenever ids are sparse
-    (e.g. rollup buckets with few groups) and spuriously mismatch."""
-    pairs = sorted(pairs)
-    remaining = n_parts
-    while remaining > fanin:
-        buckets: dict[int, list[tuple[int, bytes]]] = {}
-        for pid, blob in pairs:
-            buckets.setdefault(pid // fanin, []).append((pid, blob))
-        nxt = []
-        for grp in buckets.values():
-            grp.sort()
-            merged = _nary_merge(
-                factory, [serde.deserialize(b) for _, b in grp]
-            )
-            nxt.append((grp[0][0] // fanin, merged.to_bytes()))
-        pairs = sorted(nxt)
-        remaining = -(-remaining // fanin)
-    return _nary_merge(factory, [serde.deserialize(b) for _, b in pairs])
-
-
-def merge_partials(partials: DataFrame, factory: Callable[[], object]):
-    """Combine partial blobs into one sketch.
-
-    Commutative kinds (Bloom OR / HLL max / CMS sum) ride a depth-2
-    treeAggregate (executor-side partial merges, 'treeAggregate-style UDAF'
-    per BASELINE.json:6) — safe under any merge order.  Compaction kinds
-    (KLL/t-digest) at large fan-in reduce through the deterministic
-    bounded-fan-in tree (tree_merge_blobs) so no build path ever collects
-    all partial blobs to the driver.  Small fan-ins (≤ DEFAULT_MERGE_FANIN
-    blobs — already driver-sized) merge n-ary in canonical partition order.
-    """
-    # KIND without materializing a sketch when the factory carries it
-    # (all build.py factories do): factory() for a 1e9-key Bloom would
-    # allocate the full ~GB words array on the driver just to read a tag
-    kind = getattr(factory, "KIND", None)
-    if kind is None:
-        kind = factory().KIND
-    n_parts = partials.rdd.getNumPartitions()
-    if n_parts > DEFAULT_MERGE_FANIN:
-        if kind in _COMMUTATIVE_KINDS:
-            # zeroValue is an EMPTY sentinel, not a dense empty-sketch
-            # blob: treeAggregate serializes the zero into every task
-            # closure, and a 1e9-key Bloom zero is ~1.2 GB — merging with
-            # "empty" is identity for every commutative kind, so b""
-            # short-circuits carry the same semantics with zero bytes
-            def comb(a_blob: bytes, b_blob: bytes) -> bytes:
-                if not a_blob:
-                    return b_blob
-                if not b_blob:
-                    return a_blob
-                a = serde.deserialize(a_blob)
-                a.merge(serde.deserialize(b_blob))
-                return a.to_bytes()
-
-            merged_blob = (
-                partials.select("blob")
-                .rdd.map(lambda r: r.blob)
-                .treeAggregate(b"", comb, comb, depth=2)
-            )
-            if not merged_blob:  # zero partials: an empty build
-                return factory()
-            return serde.deserialize(merged_blob)
-        return tree_merge_blobs(partials, factory, n_parts)
-    # small fan-in: single bounded collect beats extra tree stages
-    rows = partials.select("partition_id", "blob").collect()
-    rows.sort(key=lambda r: r.partition_id)
-    return _nary_merge(factory, [serde.deserialize(r.blob) for r in rows])
-
-
-def build_sketch(
-    df: DataFrame,
-    cols: list[str] | str,
-    factory: Callable[[], object],
-    weight_col: str | None = None,
-):
-    """End-to-end: scan → per-partition vectorized partial build → merge.
-    Returns the merged sketch object.
-
-    Narrow inputs (a small file = 1 split) are fanned out to the cluster
-    first; partial_build itself always respects the caller's partitioning
-    (checkpointing relies on that contract)."""
-    from bloomfilter_spark.plans.skew import ensure_parallelism
-
-    return merge_partials(
-        partial_build(ensure_parallelism(df), cols, factory, weight_col),
-        factory,
-    )
+    return build_multi(df, {"sketch": (col, factory)})["sketch"]
 
 
 def build_sketch_with_deletes(
@@ -312,52 +77,20 @@ def build_sketch_with_deletes(
 ):
     """Distributed counting-Bloom build with deletes (the one operation the
     plain bitset can never do).  Inserts and deletes are unioned into one
-    signed-delta stream, so a delete needs NO co-location with its insert:
-    a partition folding only the delete emits a legal negative delta
-    partial, and the commutative counter-sum merge restores non-negativity
-    globally (deletes ⊆ inserts contract; violations surface as
-    negative_cells() > 0 on the merged filter).  One scan over each input,
-    one treeAggregate — identical topology to build_sketch."""
+    signed-delta stream and folded as a weighted spec, so a delete needs NO
+    co-location with its insert: a partition folding only the delete emits
+    a legal negative delta partial, and the commutative counter-sum merge
+    restores non-negativity globally (deletes ⊆ inserts contract;
+    violations surface as negative_cells() > 0 on the merged filter)."""
     from pyspark.sql import functions as F
 
-    from bloomfilter_spark.plans.skew import ensure_parallelism
+    from bloomfilter_spark.operators.pipeline import build_multi
 
-    signed = (
-        inserts_df.select(F.col(key_col).alias("__key"), F.lit(1).alias("__delta"))
-        .unionAll(
-            deletes_df.select(
-                F.col(key_col).alias("__key"), F.lit(-1).alias("__delta")
-            )
-        )
-    )
-    signed = ensure_parallelism(signed)
+    def signed(df: DataFrame, delta: int) -> DataFrame:
+        return df.select(F.col(key_col).alias("__key"), F.lit(delta).alias("__delta"))
 
-    def build_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        t0 = time.perf_counter()
-        sk = factory()
-        rows = 0
-        nbytes = 0
-        for pdf in batches:
-            clean = pdf.dropna(subset=["__key"])
-            sk.update_signed(clean["__key"], clean["__delta"].to_numpy())
-            rows += len(pdf)
-            nbytes += int(pdf.memory_usage(deep=False).sum())
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else -1
-        yield pd.DataFrame(
-            {
-                "partition_id": [pid],
-                "blob": [sk.to_bytes()],
-                "rows": [rows],
-                "input_bytes": [nbytes],
-                "wall_ms": [(time.perf_counter() - t0) * 1000.0],
-            }
-        )
-
-    partials = signed.mapInPandas(build_iter, schema=PARTIAL_SCHEMA)
-    return merge_partials(partials, factory)
+    stream = signed(inserts_df, 1).unionAll(signed(deletes_df, -1))
+    return build_multi(stream, {"sketch": ("__key", factory, "__delta")})["sketch"]
 
 
 def build_sketch_weighted(
@@ -367,8 +100,11 @@ def build_sketch_weighted(
     factory: Callable[[], object],
 ):
     """Weighted distributed build (CMS): each key row adds `weight_col`
-    instead of 1.  Same partial-blob + merge path as build_sketch."""
-    return build_sketch(df, key_col, factory, weight_col=weight_col)
+    instead of 1; a null weight adds nothing.  The sketch rejects negative
+    and non-integer weights."""
+    from bloomfilter_spark.operators.pipeline import build_multi
+
+    return build_multi(df, {"sketch": (key_col, factory, weight_col)})["sketch"]
 
 
 # ---------------------------------------------------------------------------
@@ -447,13 +183,7 @@ def build_grouped(
 
     def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("_salt")  # canonical partial order
-        acc = factory()
-        sketches = [serde.deserialize(b) for b in pdf["blob"]]
-        if hasattr(acc, "merge_all"):
-            acc.merge_all(sketches)
-        else:
-            for s in sketches:
-                acc.merge(s)
+        acc = _merge_blobs(factory(), pdf["blob"])
         out = {c: [pdf[c].iloc[0]] for c in key_cols}
         out["blob"] = [acc.to_bytes()]
         out["rows"] = [int(pdf["rows"].sum())]
@@ -467,7 +197,7 @@ def rollup_grouped(
     key_cols: list[str] | str,
     factory: Callable[[], object],
     n_buckets: int = 1024,
-    fanin: int = DEFAULT_MERGE_FANIN,
+    fanin: int = DEFAULT_FANIN,
 ):
     """Roll the per-key blobs of build_grouped up into ONE merged sketch —
     the finer aggregate answers the coarser query without rescanning the
@@ -476,14 +206,16 @@ def rollup_grouped(
 
     Stage 1 buckets groups by pmod(xxhash64(key), n_buckets) and merges each
     bucket's blobs in canonical (key_str, blob) order; stage 2 reduces the
-    bucket sketches through the same deterministic bounded-fan-in tree as
-    merge_partials, with bucket id as the ordering key.  Every stage's
+    bucket sketches through the build engine's deterministic bounded-fan-in
+    tree (pipeline._merge_tree, fixed `fanin`), with bucket id as the
+    ordering key.  Every stage's
     grouping and ordering is a pure function of the group keys, so the
     rollup is a pure function of the {(key, blob)} set + (n_buckets, fanin):
     bit-identical run-to-run regardless of scheduling.  For commutative
     sketches (Bloom/HLL/CMS) it is additionally bit-identical to a direct
     global build; compaction sketches (KLL/t-digest) follow the canonical
-    tree semantic (see tree_merge_blobs) and honor their rank-error bound.
+    tree semantic (see operators/pipeline.py) and honor their rank-error
+    bound.
 
     Sizing n_buckets: a stage-1 task holds ONE bucket's blobs in memory
     (~n_groups/n_buckets × blob bytes), so pick n_buckets ≥ n_groups ×
@@ -493,6 +225,8 @@ def rollup_grouped(
     cheap extra tree round, so round up.
     """
     from pyspark.sql import functions as F
+
+    from bloomfilter_spark.operators.pipeline import _merge_tree, _pack
 
     if isinstance(key_cols, str):
         key_cols = [key_cols]
@@ -508,20 +242,21 @@ def rollup_grouped(
     def merge_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
         # (key_str, blob) sort fully canonicalizes even hash-equal keys
         pdf = pdf.sort_values(["__key_str", "blob"], kind="stable")
-        merged = _nary_merge(
-            factory, [serde.deserialize(b) for b in pdf["blob"]]
-        )
         return pd.DataFrame(
             {
                 "partition_id": [int(pdf["__bucket"].iloc[0])],
-                "blob": [merged.to_bytes()],
+                "sketch": [_pack(_merge_blobs(factory(), pdf["blob"]))],
+                "rows": [len(pdf)],
             }
         )
 
     partials = bucketed.groupBy("__bucket").applyInPandas(
-        merge_bucket, schema="partition_id long, blob binary"
+        merge_bucket, schema="partition_id long, sketch binary, rows long"
     )
-    return tree_merge_blobs(partials, factory, n_buckets, fanin=fanin)
+    par = grouped_blobs.sparkSession.sparkContext.defaultParallelism
+    return _merge_tree(
+        partials, ["sketch"], {"sketch": factory}, n_buckets, fanin, par
+    )["sketch"]
 
 
 def rollup_regroup(
@@ -558,9 +293,7 @@ def rollup_regroup(
 
     def merge(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(["__fine", "blob"], kind="stable")
-        merged = _nary_merge(
-            factory, [serde.deserialize(b) for b in pdf["blob"]]
-        )
+        merged = _merge_blobs(factory(), pdf["blob"])
         return pd.DataFrame(
             {coarse_col: [pdf[coarse_col].iloc[0]], "blob": [merged.to_bytes()]}
         )
@@ -623,9 +356,7 @@ def rollup_sliding(
 
     def merge(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(["__fine", "blob"], kind="stable")
-        merged = _nary_merge(
-            factory, [serde.deserialize(b) for b in pdf["blob"]]
-        )
+        merged = _merge_blobs(factory(), pdf["blob"])
         return pd.DataFrame(
             {
                 "__target": [pdf["__target"].iloc[0]],
@@ -656,13 +387,6 @@ def grouped_estimates(grouped_blobs: DataFrame, finalize: str = "estimate") -> D
 # convenient factories ---------------------------------------------------------
 
 
-def _tag(fn, cls):
-    """Attach the sketch-kind tag so merge paths can learn KIND without
-    materializing an instance (a 1e9-key Bloom is ~GB)."""
-    fn.KIND = cls.KIND
-    return fn
-
-
 def bloom_factory(n: int, p: float = 0.01, seed=None):
     from bloomfilter_spark.functions.hashing import DEFAULT_SEED
 
@@ -672,7 +396,7 @@ def bloom_factory(n: int, p: float = 0.01, seed=None):
     # array into every executor's task binary (1.2 GB at n=1e9)
     proto = BloomFilter.create(n, p, seed=s)
     m, k = proto.m, proto.k
-    return _tag(lambda: BloomFilter(m, k, s), BloomFilter)
+    return lambda: BloomFilter(m, k, s)
 
 
 def cbf_factory(n: int, p: float = 0.01, seed=None):
@@ -682,14 +406,14 @@ def cbf_factory(n: int, p: float = 0.01, seed=None):
     s = DEFAULT_SEED if seed is None else seed
     proto = CountingBloomFilter.create(n, p, seed=s)
     m, k = proto.m, proto.k
-    return _tag(lambda: CountingBloomFilter(m, k, s), CountingBloomFilter)  # scalars only (see above)
+    return lambda: CountingBloomFilter(m, k, s)  # scalars only (see above)
 
 
 def hll_factory(precision: int = 14, seed=None):
     from bloomfilter_spark.functions.hashing import DEFAULT_SEED
 
     s = DEFAULT_SEED if seed is None else seed
-    return _tag(lambda: HyperLogLog(p=precision, seed=s), HyperLogLog)
+    return lambda: HyperLogLog(p=precision, seed=s)
 
 
 def cms_factory(epsilon: float = 0.0005, delta: float = 0.001, seed=None):
@@ -698,27 +422,27 @@ def cms_factory(epsilon: float = 0.0005, delta: float = 0.001, seed=None):
     s = DEFAULT_SEED if seed is None else seed
     proto = CountMinSketch.create(epsilon, delta, seed=s)
     depth, width = proto.depth, proto.width
-    return _tag(lambda: CountMinSketch(depth, width, s), CountMinSketch)  # scalars only (see above)
+    return lambda: CountMinSketch(depth, width, s)  # scalars only (see above)
 
 
 def kll_factory(k: int = 200):
-    return _tag(lambda: KLLSketch(k=k), KLLSketch)
+    return lambda: KLLSketch(k=k)
 
 
 def freqitems_factory(capacity: int = 4096):
-    return _tag(lambda: FrequentItemsSketch(capacity), FrequentItemsSketch)
+    return lambda: FrequentItemsSketch(capacity)
 
 
 def theta_factory(k: int = 16384, seed=None):
     from bloomfilter_spark.functions.hashing import DEFAULT_SEED
 
     s = DEFAULT_SEED if seed is None else seed
-    return _tag(lambda: ThetaSketch(k, seed=s), ThetaSketch)
+    return lambda: ThetaSketch(k, seed=s)
 
 
 def tdigest_factory(delta: int = 200):
-    return _tag(lambda: TDigest(delta=delta), TDigest)
+    return lambda: TDigest(delta=delta)
 
 
 def dds_factory(alpha: float = 0.01):
-    return _tag(lambda: DDSketch(alpha=alpha), DDSketch)
+    return lambda: DDSketch(alpha=alpha)

@@ -5,17 +5,25 @@ lineage + metrics" — a killed job must resume without re-scanning completed
 input splits, and the final sketch must be bit-identical to an uninterrupted
 build.
 
-Mechanism: each fold task writes its partition's partial sketch blob to
+There is one checkpoint writer, `pipeline.build_multi_checkpointed`;
+`build_sketch_checkpointed` is its one-spec call.  This module holds the
+pieces it shares with that writer's callers: the atomic write, the partial
+file names, the driver-side resume plan (`fold_pending`) and progress
+inspection (`checkpoint_progress`).
+
+Mechanism: each fold task writes its partition's partial blobs to
 ``<ckpt_dir>/partial-<pid>.bin`` (tmp-file + atomic rename — a crashed task
 leaves no half-written partial) plus a ``lineage-<pid>.json`` sidecar with
-counters (rows, input_bytes, wall_ms, sketch header).  The resume decision
-is the driver's (`fold_pending`): it lists the durable partials first and
+counters (rows, input_bytes, wall_ms).  The resume decision is the
+driver's (`fold_pending`): it lists the durable partials first and
 launches the fold job over the pending partition ids only, so a finished
 partition gets no task at all — its split is never scheduled, never read,
 and no Python worker is spent on it.  A build with nothing pending runs no
 fold job.  The merge stage always reads the complete set of partials in
-sorted-partition order (deterministic n-ary merge ⇒ bit-identical results
-whether the build ran once or resumed five times).
+sorted-partition order through the build's own merge tree (bit-identical
+results whether the build ran once or resumed five times).  A MANIFEST
+pins the columns, sketch geometry, partition count and merge-tree shape;
+a directory written by a different build is refused with a ValueError.
 
 Correctness requirements on the caller:
 - the input DataFrame's partitioning must be split-stable across runs:
@@ -28,7 +36,7 @@ Correctness requirements on the caller:
   filesystem suffices for local[N].
 
 The reference has no persistence (serialization is explicitly future work,
-/root/reference/tests/TEST_COVERAGE_SUMMARY.md:293-302); this layer is the
+tests/TEST_COVERAGE_SUMMARY.md:293-302 of the reference); this layer is the
 distributed-systems half the north rule adds on top.
 """
 
@@ -36,15 +44,9 @@ from __future__ import annotations
 
 import json
 import os
-import time
-from typing import Callable, Iterator
-
-import pandas as pd
+from typing import Callable
 
 from pyspark.sql import DataFrame
-
-from bloomfilter_spark.operators.build import _numeric_update
-from bloomfilter_spark.sketches import serde
 
 STATS_SCHEMA = (
     "partition_id long, rows long, input_bytes long, wall_ms double, "
@@ -109,115 +111,21 @@ def fold_pending(stats: DataFrame, ckpt_dir: str, n_parts: int) -> DataFrame:
 
 def build_sketch_checkpointed(
     df: DataFrame,
-    cols: list[str] | str,
+    col: str,
     factory: Callable[[], object],
     ckpt_dir: str,
     fail_on: Callable[[int], bool] | None = None,
 ):
-    """Build a sketch with per-partition checkpointing.
+    """Build one sketch with per-partition checkpointing:
+    `build_multi_checkpointed` with a single spec.  Returns (sketch,
+    lineage DataFrame); see that function for the resume contract and the
+    `fail_on` test hook."""
+    from bloomfilter_spark.operators.pipeline import build_multi_checkpointed
 
-    A rerun into the same ckpt_dir folds only the partitions without a
-    partial (`fold_pending`); the partials are then merged on the driver.
-    The input's partitioning must be split-stable across runs (see the
-    module docstring).
-
-    Returns (sketch, lineage DataFrame).  `fail_on(pid)` is a test hook: a
-    task whose partition satisfies it raises mid-build (simulating a kill),
-    AFTER earlier partitions' checkpoints are durable.
-    """
-    if isinstance(cols, str):
-        cols = [cols]
-    os.makedirs(ckpt_dir, exist_ok=True)
-    pruned = df.select(*cols)
-    n_parts = pruned.rdd.getNumPartitions()
-
-    # manifest guard: a checkpoint dir is only resumable for the same
-    # (columns, sketch geometry, partition count).  Input *data* identity
-    # can't be cheaply verified — the documented contract is an immutable
-    # input (pin an Iceberg snapshot-id); this check catches the other
-    # silent-corruption reuses (different column, factory, or layout).
-    manifest = {
-        "cols": cols,
-        "n_parts": n_parts,
-        "sketch_header": factory().to_bytes()[:64].hex(),
-    }
-    man_path = os.path.join(ckpt_dir, "MANIFEST.json")
-    if os.path.exists(man_path):
-        with open(man_path) as f:
-            prev = json.load(f)
-        if prev != manifest:
-            raise ValueError(
-                "checkpoint dir was written by a different build "
-                f"(manifest {prev} != {manifest}); use a fresh ckpt_dir"
-            )
-    else:
-        _atomic_write(man_path, json.dumps(manifest).encode())
-
-    def build_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
-        if fail_on is not None and fail_on(pid):
-            raise RuntimeError(f"injected failure in partition {pid}")
-        t0 = time.perf_counter()
-        sk = factory()
-        rows = 0
-        nbytes = 0
-        for pdf in batches:
-            for c in cols:
-                _numeric_update(sk, pdf[c])
-            rows += len(pdf)
-            nbytes += int(pdf.memory_usage(deep=False).sum())
-        wall_ms = (time.perf_counter() - t0) * 1000.0
-        _atomic_write(partial_path(ckpt_dir, pid), sk.to_bytes())
-        _atomic_write(
-            os.path.join(ckpt_dir, f"lineage-{pid:06d}.json"),
-            json.dumps(
-                {
-                    "partition_id": pid,
-                    "rows": rows,
-                    "input_bytes": nbytes,
-                    "wall_ms": wall_ms,
-                    "cols": cols,
-                    "sketch_kind": type(sk).__name__,
-                    "completed_at": time.time(),
-                }
-            ).encode(),
-        )
-        yield pd.DataFrame(
-            {
-                "partition_id": [pid],
-                "rows": [rows],
-                "input_bytes": [nbytes],
-                "wall_ms": [wall_ms],
-                "resumed": [False],
-            }
-        )
-
-    lineage = fold_pending(
-        pruned.mapInPandas(build_iter, schema=STATS_SCHEMA), ckpt_dir, n_parts
+    merged, lineage = build_multi_checkpointed(
+        df, {"sketch": (col, factory)}, ckpt_dir, fail_on=fail_on
     )
-
-    # merge: complete partial set, sorted order → deterministic.  The
-    # commutative path STREAMS (open → merge → discard): memory stays at
-    # 2 sketches instead of n_parts sketches — a few hundred 1 GB Bloom
-    # partials would otherwise OOM the driver.  Compaction sketches
-    # (merge_all) keep the single canonical n-ary merge: their partials
-    # are KB-sized (KLL/t-digest), and the one-shot order is the pinned
-    # determinism contract.
-    def _read(pid: int):
-        with open(partial_path(ckpt_dir, pid), "rb") as f:
-            return serde.deserialize(f.read())
-
-    acc = factory()
-    if hasattr(acc, "merge_all"):
-        acc.merge_all([_read(pid) for pid in range(n_parts)])
-    else:
-        for pid in range(n_parts):
-            acc.merge(_read(pid))
-
-    return acc, lineage
+    return merged["sketch"], lineage
 
 
 def checkpoint_progress(ckpt_dir: str) -> dict:
@@ -233,8 +141,7 @@ def checkpoint_progress(ckpt_dir: str) -> dict:
                 rec = json.load(f)
             done.append(rec["partition_id"])
             totals["rows"] += rec.get("rows", 0)
-            # suite checkpoints (pipeline.build_multi_checkpointed) write
-            # lineage sidecars without input_bytes — tolerate both shapes
+            # sidecars written before input_bytes was recorded lack it
             totals["input_bytes"] += rec.get("input_bytes", 0)
             totals["wall_ms"] += rec.get("wall_ms", 0.0)
     return {"completed_partitions": done, **totals}

@@ -64,7 +64,7 @@ def contaminated_docs(
 
     # localCheckpoint: this small-by-construction relation is read by the
     # sizing count, the sketch build (whose ensure_parallelism /
-    # merge_partials .rdd accesses materialize upstream exchanges under
+    # partition-count .rdd accesses materialize upstream exchanges under
     # AQE), and the verify join — without it the shingle+distinct
     # pipeline re-executes for each of those readers
     bench_sh = (

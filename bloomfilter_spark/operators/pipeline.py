@@ -1,32 +1,39 @@
-"""One-scan multi-sketch build pipeline over the `pages` table.
+"""The library's one sketch build engine, and the pages suite built on it.
 
-At 100 TB the scan dominates: reading the table once per sketch would be a
-5-7× waste.  This pipeline folds ALL the suite's sketches (Bloom over url,
-HLL over url/host, CMS over host/lang, Misra-Gries heavy-hitter hosts,
-KLL + t-digest over text length) into
-a single `mapInPandas` pass — one parquet scan, one JVM→Python Arrow hop —
-then reduces the per-partition partial blobs with a deterministic bounded
-fan-in merge tree:
+Every distributed build runs here: `build_multi` and
+`build_multi_checkpointed`, the single-sketch forms in operators/build.py
+(`build_sketch`, `build_sketch_weighted`, `build_sketch_with_deletes`) and
+`checkpoint.build_sketch_checkpointed` are calls of these two with one or
+more specs.  At 100 TB the scan dominates, so all of a build's sketches
+(the pages suite: Bloom over url, HLL over url/host, CMS over host/lang,
+Misra-Gries heavy-hitter hosts, KLL + t-digest + DDSketch over text length)
+share one parquet scan and one JVM→Python Arrow hop:
 
-  round k: bucket = partition_id // fanin, applyInPandas n-ary merge per
-           bucket (blobs merged in sorted partition_id order)
-  final:   ≤ fanin rows collected, driver n-ary merge in sorted order
+  fold:   `fold_partials` — one mapInArrow task per partition folds its
+          Arrow batches into one partial per spec and emits one row
+          (partition_id, one zlib-packed blob per spec, rows)
+  rounds: while more partials remain than the final fan-in, bucket =
+          partition_id // step and each bucket merges n-ary in sorted
+          partition_id order (applyInPandas); `_merge_steps` picks the
+          steps
+  driver: ≤ fan-in rows collected, n-ary merge in sorted order
 
 The tree never materializes more than `fanin` blobs in one task and never
 ships all P partials to the driver (P ≈ 800k at 100 TB / 128 MB splits), and
 bucket composition + intra-bucket order are pure functions of partition_id —
 so the result is identical regardless of task scheduling, which is how the
-merge-order-sensitive compaction sketches (KLL, t-digest — see
-sketches/kll.py) stay deterministic.  Commutative sketches (Bloom OR / HLL
-max / CMS sum) are bit-identical under any merge order anyway
-(/root/reference/bloomfilter.go:209-213 union semantics).
+merge-order-sensitive compaction sketches (KLL, t-digest, frequent items —
+see sketches/kll.py) stay deterministic, and `tree_merge_replay` replays
+the same tree on the driver.  Commutative sketches (Bloom OR / HLL max /
+CMS and counting-Bloom sums) are bit-identical under any merge order anyway
+(the reference's Union semantics, bloomfilter.go:209-213).
 """
 
 from __future__ import annotations
 
 import math
 import zlib
-from typing import Callable, Iterator
+from typing import Callable, Iterable, Iterator
 
 import pandas as pd
 
@@ -34,6 +41,8 @@ from pyspark.sql import DataFrame, functions as F
 
 from bloomfilter_spark.functions.urls import host_of
 from bloomfilter_spark.operators.build import (
+    DEFAULT_FANIN,
+    _merge_blobs,
     bloom_factory,
     cms_factory,
     dds_factory,
@@ -41,11 +50,8 @@ from bloomfilter_spark.operators.build import (
     hll_factory,
     kll_factory,
     tdigest_factory,
-    _numeric_update,
 )
 from bloomfilter_spark.sketches import serde
-
-DEFAULT_FANIN = 64
 
 # Partial blobs are sparse (a P-partition build puts ~1/P of the keys in
 # each partial ⇒ low bit/counter density) and compress 10-20×; the merge
@@ -61,46 +67,74 @@ def _unpack(blob: bytes):
     return serde.deserialize(zlib.decompress(blob))
 
 
+def _plan(df: DataFrame, specs: dict[str, tuple]):
+    """Split specs — name -> (column, factory) or (column, factory, weight
+    column) — into (pruned input, factories, col_of, weight_of).  The
+    input keeps only the columns the specs read, fanned out to the cluster
+    when it arrives narrow."""
+    from bloomfilter_spark.plans.skew import ensure_parallelism
+
+    factories = {n: s[1] for n, s in specs.items()}
+    col_of = {n: s[0] for n, s in specs.items()}
+    weight_of = {n: s[2] for n, s in specs.items() if len(s) > 2}
+    cols = sorted({*col_of.values(), *weight_of.values()})
+    return ensure_parallelism(df.select(*cols)), factories, col_of, weight_of
+
+
 def _fold_partition(
     batches,
     names: list[str],
     factories: dict[str, Callable[[], object]],
     col_of: dict[str, str],
+    weight_of: dict[str, str],
 ) -> tuple[dict[str, object], int]:
-    """Fold one partition's Arrow batches into all the suite's sketches.
+    """Fold one partition's Arrow batches into every spec's sketch.
 
     Batches are raw `pyarrow.RecordBatch`es (mapInArrow): the hash kernels
     read the Arrow string/binary buffers zero-copy, so skipping the
     Arrow→pandas object conversion removes the biggest fixed cost of the
-    string path (~25% of suite-build wall).
+    string path (~25% of suite-build wall).  Null keys are skipped.
 
     Hash sharing: sketches on the same column with the same seed all
-    consume one murmur3 pass (update() is just hash_any + add_hashes)."""
+    consume one murmur3 pass (update() is just hash_any + add_hashes).  A
+    weighted spec passes its weights — nulls as 0 — to
+    add_hashes(h1, h2, weights)."""
     import numpy as np
 
     from bloomfilter_spark.functions.hashing import hash_any
 
     sks = {n: factories[n]() for n in names}
-    by_col: dict[str, list] = {}
+    by_col: dict[str, list[str]] = {}
     for n in names:
-        by_col.setdefault(col_of[n], []).append(sks[n])
+        by_col.setdefault(col_of[n], []).append(n)
     rows = 0
     for rb in batches:
-        for c, col_sks in by_col.items():
-            clean = rb.column(rb.schema.get_field_index(c)).drop_null()
+        for c, col_names in by_col.items():
+            keys = rb.column(rb.schema.get_field_index(c))
+            clean = keys.drop_null()
             hash_cache: dict[int, tuple] = {}
-            for sk in col_sks:
-                if hasattr(sk, "add_hashes") and hasattr(sk, "seed"):
-                    seed = int(sk.seed)
-                    if seed not in hash_cache:
-                        hash_cache[seed] = hash_any(clean, seed)
-                    sk.add_hashes(*hash_cache[seed])
+
+            def hashes(sk) -> tuple:
+                seed = int(sk.seed)
+                if seed not in hash_cache:
+                    hash_cache[seed] = hash_any(clean, seed)
+                return hash_cache[seed]
+
+            for n in col_names:
+                sk = sks[n]
+                if n in weight_of:
+                    w = rb.column(rb.schema.get_field_index(weight_of[n]))
+                    if keys.null_count:
+                        w = w.filter(keys.is_valid())
+                    w = w.fill_null(0).to_numpy(zero_copy_only=False)
+                    sk.add_hashes(*hashes(sk), w)
+                elif hasattr(sk, "add_hashes") and hasattr(sk, "seed"):
+                    sk.add_hashes(*hashes(sk))
                 elif hasattr(sk, "update_arrow"):
                     # frequent-items: raw-key fold via pyarrow value_counts
                     sk.update_arrow(clean)
                 else:
-                    # KLL/t-digest numeric fold — same value stream as the
-                    # pandas path (drop nulls, cast float64)
+                    # KLL/t-digest/DDSketch numeric fold (cast float64)
                     sk.update(
                         np.asarray(
                             clean.to_numpy(zero_copy_only=False),
@@ -111,81 +145,88 @@ def _fold_partition(
     return sks, rows
 
 
-def build_multi(
-    df: DataFrame,
-    specs: dict[str, tuple[str, Callable[[], object]]],
-    fanin: int | None = None,
-    return_rows: bool = False,
-) -> dict[str, object] | tuple[dict[str, object], int]:
-    """Build many sketches in ONE scan.
+def fold_partials(
+    df: DataFrame, specs: dict[str, tuple]
+) -> tuple[DataFrame, int]:
+    """The fold stage of `build_multi`: (partials, n_parts).
 
-    specs: name -> (column, factory).  Returns name -> merged sketch.
-    fanin=None auto-sizes the merge tree: the first reduce round makes
-    ~2×parallelism buckets so every core merges, instead of a handful of
-    fat tasks serializing the reduction.
-    """
-    from bloomfilter_spark.plans.skew import ensure_parallelism
-
+    `partials` has one row per input partition — partition_id, one
+    zlib-packed partial blob per spec name, rows — and is what the merge
+    tree reduces; `tree_merge_replay` takes its (partition_id, blob) pairs."""
     names = list(specs)
-    cols = sorted({c for c, _ in specs.values()})
-    pruned = ensure_parallelism(df.select(*cols))
-    factories = {n: f for n, (_, f) in specs.items()}
-    col_of = {n: c for n, (c, _) in specs.items()}
-
+    pruned, factories, col_of, weight_of = _plan(df, specs)
     blob_cols = ", ".join(f"`{n}` binary" for n in names)
-    schema = f"partition_id long, {blob_cols}, rows long"
 
     def build_iter(batches):
         import pyarrow as pa
 
         from pyspark import TaskContext
 
-        sks, rows = _fold_partition(batches, names, factories, col_of)
+        sks, rows = _fold_partition(batches, names, factories, col_of, weight_of)
         ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else -1
-        out = {"partition_id": [pid]}
+        out = {"partition_id": [ctx.partitionId() if ctx is not None else -1]}
         out.update({n: [_pack(sks[n])] for n in names})
         out["rows"] = [rows]
         yield pa.RecordBatch.from_pydict(out)
 
-    partials = pruned.mapInArrow(build_iter, schema=schema)
-    n_parts = pruned.rdd.getNumPartitions()
+    partials = pruned.mapInArrow(
+        build_iter, schema=f"partition_id long, {blob_cols}, rows long"
+    )
+    return partials, pruned.rdd.getNumPartitions()
+
+
+def build_multi(
+    df: DataFrame,
+    specs: dict[str, tuple],
+    fanin: int | None = None,
+    return_rows: bool = False,
+) -> dict[str, object] | tuple[dict[str, object], int]:
+    """Build many sketches in ONE scan.
+
+    specs: name -> (column, factory), or (column, factory, weight column)
+    for a weighted fold (CMS mass; counting-Bloom signed deltas).  Returns
+    name -> merged sketch.  fanin=None auto-sizes the merge tree: each
+    reduce round makes ~2×parallelism buckets so every core merges, instead
+    of a handful of fat tasks serializing the reduction.
+    """
+    partials, n_parts = fold_partials(df, specs)
     par = df.sparkSession.sparkContext.defaultParallelism
+    factories = {n: s[1] for n, s in specs.items()}
     return _merge_tree(
-        partials, schema, names, factories, n_parts, fanin, par,
+        partials, list(specs), factories, n_parts, fanin, par,
         return_rows=return_rows,
     )
 
 
 def build_multi_checkpointed(
     df: DataFrame,
-    specs: dict[str, tuple[str, Callable[[], object]]],
+    specs: dict[str, tuple],
     ckpt_dir: str,
     fanin: int | None = None,
     fail_on: Callable[[int], bool] | None = None,
     input_pin: str | None = None,
 ):
     """`build_multi` with per-partition checkpoint/resume — the north-rule
-    resume contract on the path that actually runs at 100 TB (a killed
-    8-sketch suite build must NOT rescan completed splits).
+    resume contract (a killed build must NOT rescan completed splits).
 
     Each fold task atomically writes `partial-<pid>.bin` (all of its
     sketches' zlib partial blobs in one file) plus a lineage sidecar.  On
     resume the driver lists the partials and runs the fold over the pending
     partitions only (checkpoint.fold_pending): a finished partition gets no
     task, so its split is never read, and nothing pending means no fold
-    job.  The merge then reads every partial.  With n_parts ≤ the final
-    fan-in the driver opens them itself and runs the same n-ary merge
-    build_multi's driver step runs (no Spark job); above it the partials
-    are reloaded as a DataFrame (binaryFile source — never a driver
-    glob-read of 800k blobs) and reduced through the same deterministic
-    bounded-fan-in tree as build_multi.  Either way an
+    job.  The merge then reads every partial.  When the tree has no
+    distributed round (n_parts ≤ the final fan-in) the driver opens the
+    partials one file at a time and runs the same n-ary merge build_multi's
+    driver step runs (no Spark job); otherwise the partials are reloaded as
+    a DataFrame (binaryFile source — never a driver glob-read of 800k
+    blobs) and reduced through the same tree as build_multi.  Either way an
     interrupted-then-resumed build is bit-identical to an uninterrupted one.
 
-    Returns (name -> merged sketch, lineage DataFrame).  Same caller
-    contract as build_sketch_checkpointed: split-stable input partitioning
-    across runs (a parquet/Iceberg scan; salted output only over such a
-    scan), ckpt_dir on shared storage.
+    Returns (name -> merged sketch, lineage DataFrame).  Caller contract:
+    split-stable input partitioning across runs (a parquet/Iceberg scan;
+    salted output only over such a scan), ckpt_dir on shared storage.
+    `fail_on(pid)` is a test hook: a task whose partition satisfies it
+    raises mid-build (simulating a kill).
 
     input_pin: opaque identifier of the immutable input version — for an
     Iceberg source, the snapshot id (sources.tables.current_snapshot_id);
@@ -207,13 +248,10 @@ def build_multi_checkpointed(
         fold_pending,
         partial_path,
     )
-    from bloomfilter_spark.plans.skew import ensure_parallelism
 
     names = list(specs)
-    cols = sorted({c for c, _ in specs.values()})
-    pruned = ensure_parallelism(df.select(*cols))
-    factories = {n: f for n, (_, f) in specs.items()}
-    col_of = {n: c for n, (c, _) in specs.items()}
+    pruned, factories, col_of, weight_of = _plan(df, specs)
+    cols = pruned.columns
     n_parts = pruned.rdd.getNumPartitions()
 
     os.makedirs(ckpt_dir, exist_ok=True)
@@ -230,7 +268,9 @@ def build_multi_checkpointed(
         "input_pin": input_pin,
         "merge_par": merge_par,
         "sketches": {
-            n: [col_of[n], factories[n]().to_bytes()[:64].hex()] for n in names
+            n: [col_of[n], factories[n]().to_bytes()[:64].hex()]
+            + ([weight_of[n]] if n in weight_of else [])
+            for n in names
         },
     }
     man_path = os.path.join(ckpt_dir, "MANIFEST.json")
@@ -273,7 +313,9 @@ def build_multi_checkpointed(
                 nbytes += int(rb.nbytes)
                 yield rb
 
-        sks, rows = _fold_partition(counted(batches), names, factories, col_of)
+        sks, rows = _fold_partition(
+            counted(batches), names, factories, col_of, weight_of
+        )
         wall_ms = (time.perf_counter() - t0) * 1000.0
         payload = pickle.dumps(
             {"rows": rows, "blobs": {n: _pack(sks[n]) for n in names}},
@@ -286,6 +328,7 @@ def build_multi_checkpointed(
                 {
                     "partition_id": pid,
                     "rows": rows,
+                    "input_bytes": nbytes,
                     "wall_ms": wall_ms,
                     "cols": cols,
                     "sketches": names,
@@ -307,14 +350,16 @@ def build_multi_checkpointed(
         pruned.mapInArrow(build_iter, schema=STATS_SCHEMA), ckpt_dir, n_parts
     )
 
-    if n_parts <= (fanin if fanin is not None else DEFAULT_FANIN):
+    if not _merge_steps(n_parts, fanin, merge_par):
         # the tree would have no distributed round: its driver step is this
-        # same n-ary merge over ≤ fan-in partials, so skip the reload job
-        recs = []
-        for pid in range(n_parts):
+        # same n-ary merge, so skip the reload job.  One file at a time, so
+        # a giant Bloom merge holds 2 sketches, not n_parts.
+        def read(pid: int) -> dict:
             with open(partial_path(ckpt_dir, pid), "rb") as f:
-                recs.append({"partition_id": pid, **pickle.load(f)["blobs"]})
-        return _nary_merge_pdf(pd.DataFrame(recs), names, factories), lineage
+                return pickle.load(f)["blobs"]
+
+        recs = (read(pid) for pid in range(n_parts))
+        return _merge_records(recs, names, factories), lineage
 
     blob_cols = ", ".join(f"`{n}` binary" for n in names)
     schema = f"partition_id long, {blob_cols}, rows long"
@@ -341,10 +386,48 @@ def build_multi_checkpointed(
     partials = files.mapInPandas(parse_iter, schema=schema)
     # merge_par from the MANIFEST, not the live cluster: the tree shape
     # must match the original build's for bit-identical resumes
-    merged = _merge_tree(
-        partials, schema, names, factories, n_parts, fanin, merge_par
-    )
+    merged = _merge_tree(partials, names, factories, n_parts, fanin, merge_par)
     return merged, lineage
+
+
+def _merge_steps(n_parts: int, fanin: int | None, parallelism: int) -> list[int]:
+    """Fan-in of each distributed merge round, first round first.
+
+    fanin=None (adaptive): each round uses the smallest fan-in that still
+    makes ≤ 2×parallelism buckets (so the round spreads over every core),
+    floored at 8 and capped at DEFAULT_FANIN; rounds repeat until ≤
+    DEFAULT_FANIN rows remain for the driver.  An explicit fanin gives a
+    fixed-shape tree (tests use fanin=2 to force depth)."""
+    steps = []
+    remaining = n_parts
+    while remaining > (fanin if fanin is not None else DEFAULT_FANIN):
+        step = fanin if fanin is not None else min(
+            DEFAULT_FANIN, max(8, math.ceil(remaining / max(1, 2 * parallelism)))
+        )
+        steps.append(step)
+        remaining = math.ceil(remaining / step)
+    return steps
+
+
+def _merge_records(
+    records: Iterable[dict], names: list[str], factories: dict
+) -> dict[str, object]:
+    """n-ary merge of partial records (name -> packed blob), taken in the
+    order given.  Kinds with merge_all get the whole multiset at once
+    (their packed partials are KB-sized); every other kind merges and drops
+    one partial at a time, so at most 2 of its sketches are unpacked at
+    once (a 1.2 GB Bloom × 64 partials would otherwise need 77 GB)."""
+    out = {n: factories[n]() for n in names}
+    held = {n: [] for n in names if hasattr(out[n], "merge_all")}
+    for rec in records:
+        for n in names:
+            if n in held:
+                held[n].append(rec[n])
+            else:
+                out[n].merge(_unpack(rec[n]))
+    for n, blobs in held.items():
+        _merge_blobs(out[n], blobs, _unpack)
+    return out
 
 
 def _nary_merge_pdf(
@@ -352,49 +435,24 @@ def _nary_merge_pdf(
 ) -> dict[str, object]:
     """Merge one bucket of partial rows, sorted by partition_id (canonical
     order — determinism for compaction sketches)."""
-    pdf = pdf.sort_values("partition_id")
-    out = {}
-    for n in names:
-        acc = factories[n]()
-        parts = [_unpack(b) for b in pdf[n]]
-        if hasattr(acc, "merge_all"):
-            acc.merge_all(parts)
-        else:
-            for p in parts:
-                acc.merge(p)
-        out[n] = acc
-    return out
+    recs = pdf.sort_values("partition_id").to_dict("records")
+    return _merge_records(recs, names, factories)
 
 
 def _merge_tree(
     partials: DataFrame,
-    schema: str,
     names: list[str],
     factories: dict,
     n_parts: int,
     fanin: int | None,
-    parallelism: int = 32,
+    parallelism: int,
     return_rows: bool = False,
 ) -> dict[str, object] | tuple[dict[str, object], int]:
-    """Bounded-fan-in reduction of partial blobs.
-
-    fanin=None (adaptive): each reduce round uses the smallest fan-in that
-    still makes ≤ 2×parallelism buckets (so the round spreads over every
-    core), floored at 8 and capped at DEFAULT_FANIN; rounds repeat until ≤
-    DEFAULT_FANIN rows remain for the driver.  An explicit fanin gives a
-    fixed-shape tree (tests use fanin=2 to force depth).
-    """
+    """Bounded-fan-in reduction of partial rows (partition_id, one packed
+    blob per name, rows): one applyInPandas round per `_merge_steps` step,
+    then the driver merge."""
     level = partials
-    remaining = n_parts
-    final_fanin = fanin if fanin is not None else DEFAULT_FANIN
-    while remaining > final_fanin:
-        if fanin is None:
-            step = min(
-                DEFAULT_FANIN,
-                max(8, math.ceil(remaining / max(1, 2 * parallelism))),
-            )
-        else:
-            step = fanin
+    for step in _merge_steps(n_parts, fanin, parallelism):
 
         def make_merge_bucket(step: int):
             # applyInPandas gives single-arg callables the group pdf; the
@@ -412,15 +470,41 @@ def _merge_tree(
         level = (
             level.withColumn("_bucket", (F.col("partition_id") / step).cast("long"))
             .groupBy("_bucket")
-            .applyInPandas(make_merge_bucket(step), schema=schema)
+            .applyInPandas(make_merge_bucket(step), schema=partials.schema)
         )
-        remaining = math.ceil(remaining / step)
 
     final_pdf = level.toPandas()
     merged = _nary_merge_pdf(final_pdf, names, factories)
     if return_rows:
         return merged, int(final_pdf["rows"].sum())
     return merged
+
+
+def tree_merge_replay(
+    pairs: list[tuple[int, bytes]],
+    factory: Callable[[], object],
+    n_parts: int,
+    parallelism: int,
+    fanin: int | None = None,
+):
+    """Driver-side replay of `_merge_tree` for one sketch — the determinism
+    oracle: a distributed build must be bit-identical to it.
+
+    pairs: (partition_id, packed partial) as `fold_partials` emits them.
+    n_parts, parallelism and fanin must equal what the build used: the
+    round steps come from `_merge_steps` over the DECLARED width, not the
+    number of pairs (ids can be sparse)."""
+    names, factories = ["sketch"], {"sketch": factory}
+    pdf = pd.DataFrame(pairs, columns=["partition_id", "sketch"])
+    for step in _merge_steps(n_parts, fanin, parallelism):
+        pdf = pd.DataFrame(
+            [
+                (b, _pack(_nary_merge_pdf(grp, names, factories)["sketch"]))
+                for b, grp in pdf.groupby(pdf["partition_id"] // step)
+            ],
+            columns=["partition_id", "sketch"],
+        )
+    return _nary_merge_pdf(pdf, names, factories)["sketch"]
 
 
 # ---------------------------------------------------------------------------

@@ -665,8 +665,9 @@ def q_theta_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     so every sketch stays in exact mode (θ = 2^64, retained = all distinct
     key hashes) and the counts are exact — the full-value SQL oracle; at
     10^12 docs the SAME query returns estimates with RSE ≤ 1/√(k−1) per
-    Dasgupta et al. 2016.  Each side builds in its own filter-pruned scan
-    and merges via the commutative treeAggregate path."""
+    Dasgupta et al. 2016.  Each side builds in its own filter-pruned scan;
+    the theta merge is commutative, so its bits do not depend on the
+    merge tree."""
     ev = _t(spark, sf_dir, "events")
     a = build_sketch(
         ev.filter(F.col("event_type") == "click"), "user_id", theta_factory(16384)
@@ -722,7 +723,7 @@ def q_cbf_delete_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     ones, then probe everything.  The build unions inserts and deletes into
     one signed-delta stream (build_sketch_with_deletes), so a delete never
     needs co-location with its insert; partials may be negative, and the
-    commutative counter-sum treeAggregate restores non-negativity globally.
+    commutative counter-sum merge restores non-negativity globally.
     Invariants surfaced: zero false negatives on remaining keys, deleted
     keys degrade to collision-rate hits (≤ 2× configured FPP, same gate as
     bloomfilter_test.go:338-370), and negative_cells == 0 proves every

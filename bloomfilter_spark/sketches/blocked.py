@@ -195,10 +195,4 @@ def blocked_bloom_factory(n: int, p: float = 0.01, seed: int | None = None):
     s = DEFAULT_SEED if seed is None else seed
     proto = BlockedBloomFilter.create(n, p, seed=s)
     m, k = proto.m, proto.k
-    fn = lambda: BlockedBloomFilter(m, k, s)  # noqa: E731
-    # KIND tag (same contract as build._tag): merge_partials must learn
-    # the kind WITHOUT materializing an instance — the giant-filter
-    # regime this layout exists for would otherwise allocate the full
-    # words array on the driver just to read a tag
-    fn.KIND = BlockedBloomFilter.KIND
-    return fn
+    return lambda: BlockedBloomFilter(m, k, s)

@@ -17,8 +17,8 @@ Distributed-delete design (Spark-first, not in any single-node CBF):
 counters are SIGNED int64 deltas.  A partition that sees only the delete of
 a key (its insert happened in another partition) folds a legal negative
 partial; the global merge (element-wise sum — commutative and associative,
-so it rides the same treeAggregate as Bloom's OR) restores non-negativity
-as long as deletes ⊆ inserts as a multiset.  Membership and popcount are
+so any merge tree gives the same bits, as for Bloom's OR) restores
+non-negativity as long as deletes ⊆ inserts as a multiset.  Membership and popcount are
 therefore defined on the MERGED filter only; partials are opaque deltas.
 
 Invariants (given deletes ⊆ inserts):
@@ -92,41 +92,40 @@ class CountingBloomFilter:
             pos %= U64(self.m)
             return pos
 
-    def _apply(self, values, sign: int, deltas=None) -> None:
-        h1, h2 = hash_any(values, self.seed)
+    def add_hashes(self, h1: np.ndarray, h2: np.ndarray, weights=None) -> None:
+        """Fold pre-hashed keys.  weights: signed per-key deltas (+1 insert
+        / -1 delete); None inserts each key once."""
         if len(h1) == 0:
             return
         pos = self._positions(h1, h2).view(np.int64).ravel()
-        if deltas is None:
+        if weights is None:
             # np.add.at has a fast indexed inner loop (unlike bitwise_or.at)
             # and is duplicate-safe: colliding positions accumulate.
-            np.add.at(self.counts, pos, sign)
-            if sign > 0:
-                self.n_added += len(h1)
-            else:
-                self.n_removed += len(h1)
-        else:
-            deltas = np.asarray(deltas, dtype=np.int64)
-            if len(deltas) != len(h1):
-                raise ValueError("cbf: deltas length must match values length")
-            np.add.at(self.counts, pos, np.repeat(deltas, self.k))
-            self.n_added += int(deltas[deltas > 0].sum())
-            self.n_removed += int(-deltas[deltas < 0].sum())
+            np.add.at(self.counts, pos, 1)
+            self.n_added += len(h1)
+            return
+        deltas = np.asarray(weights, dtype=np.int64)
+        if len(deltas) != len(h1):
+            raise ValueError("cbf: deltas length must match values length")
+        np.add.at(self.counts, pos, np.repeat(deltas, self.k))
+        self.n_added += int(deltas[deltas > 0].sum())
+        self.n_removed += int(-deltas[deltas < 0].sum())
 
     def update(self, values) -> None:
         """Insert a batch: each key increments its k counters."""
-        self._apply(values, 1)
+        self.add_hashes(*hash_any(values, self.seed))
 
     def remove(self, values) -> None:
         """Delete a batch: each key decrements its k counters.  Only legal
         for keys previously inserted (standard CBF contract); violations
         surface as negative_cells() > 0 on the merged filter."""
-        self._apply(values, -1)
+        h1, h2 = hash_any(values, self.seed)
+        self.add_hashes(h1, h2, np.full(len(h1), -1, dtype=np.int64))
 
     def update_signed(self, values, deltas) -> None:
-        """Batch of signed per-row deltas (+1 insert / -1 delete) — the
-        distributed build path, where one Arrow batch can interleave both."""
-        self._apply(values, 0, deltas=deltas)
+        """Batch of signed per-row deltas (+1 insert / -1 delete), where one
+        batch can interleave both."""
+        self.add_hashes(*hash_any(values, self.seed), deltas)
 
     # -- query ----------------------------------------------------------------
 
@@ -153,8 +152,8 @@ class CountingBloomFilter:
             raise ValueError(f"counting bloom filters must have same size for {op}")
 
     def merge(self, other: "CountingBloomFilter") -> "CountingBloomFilter":
-        """Element-wise counter sum — commutative + associative, so the
-        distributed merge rides the same treeAggregate as Bloom's OR."""
+        """Element-wise counter sum — commutative + associative, so every
+        distributed merge order gives the same counters, as for Bloom's OR."""
         self._check_geometry(other, "merge")
         np.add(self.counts, other.counts, out=self.counts)
         self.n_added += other.n_added

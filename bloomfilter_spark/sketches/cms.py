@@ -98,7 +98,14 @@ class CountMinSketch:
             add = np.bincount(flat_idx, minlength=self.depth * self.width)
             w_total = n
         else:
-            w = np.asarray(weights, dtype=np.int64)
+            w = np.asarray(weights)
+            if w.dtype.kind == "f" and not (np.isfinite(w) & (w == np.trunc(w))).all():
+                # silent truncation would change the counted mass (0.4 -> 0)
+                raise TypeError(
+                    "countmin: non-integer weights — scale to integer mass "
+                    "upstream (counters are int64)"
+                )
+            w = w.astype(np.int64)
             if w.size and int(w.min()) < 0:
                 # negative mass breaks the overestimate-only guarantee
                 # (query >= true count) and drives `total` negative, which

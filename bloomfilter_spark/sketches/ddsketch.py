@@ -11,9 +11,8 @@ the pair:
   sketches are loosest;
 - the store is a log-scale histogram, so ranks are EXACT (only values are
   quantized) and the merge is a bucket-wise counter sum — commutative,
-  associative, and bit-identical for any merge tree, which lets the
-  distributed build ride the same treeAggregate fast path as HLL/CMS
-  (operators/build.py _COMMUTATIVE_KINDS) with no canonical-order machinery;
+  associative, and bit-identical for any merge tree, so a distributed
+  build equals a local one at any partition count, as for HLL/CMS;
 - every estimate is a closed-form function of (α, bucket index), so a SQL
   engine can replay the whole sketch exactly — the catalog query
   `dds_quantiles_value` carries a full value oracle, which neither KLL nor

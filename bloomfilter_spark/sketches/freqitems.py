@@ -30,8 +30,8 @@ Determinism: a batch is folded as its exact value_counts, so a partial is a
 pure function of the partition's row multiset and the (deterministic) Arrow
 batch boundaries; `merge_all` sums ALL inputs' counters first and prunes
 ONCE, so the n-ary combine is a pure function of the input multiset —
-build.py routes this kind through the canonical bounded-fan-in tree
-(tree_merge_blobs), same as KLL/t-digest.  Serialization orders counters
+the build engine's canonical bounded-fan-in tree (operators/pipeline.py)
+fixes the multisets, same as for KLL/t-digest.  Serialization orders counters
 (count desc, key asc), so equal summaries are bit-identical blobs.
 """
 

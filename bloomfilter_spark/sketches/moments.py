@@ -54,6 +54,8 @@ class MomentsSketch:
     __slots__ = ("n", "n_nonfinite", "minv", "maxv", "mean_", "m2", "n_added")
 
     _PAYLOAD = struct.Struct("<QQdddd")
+    # payload layout tag in the params: 2 = (mean, M2)
+    _LAYOUT = b"\x02"
 
     def __init__(self) -> None:
         self.n = 0  # finite values folded
@@ -150,13 +152,23 @@ class MomentsSketch:
         payload = self._PAYLOAD.pack(
             self.n, self.n_nonfinite, self.minv, self.maxv, self.mean_, self.m2
         )
-        return serde.pack(serde.KIND_MOMENTS, 0, self.n_added, b"", payload)
+        return serde.pack(
+            serde.KIND_MOMENTS, 0, self.n_added, self._LAYOUT, payload
+        )
 
     @classmethod
     def from_bytes(cls, blob: bytes) -> "MomentsSketch":
-        kind, _seed, n_added, _params, payload = serde.unpack(blob)
+        kind, _seed, n_added, params, payload = serde.unpack(blob)
         if kind != serde.KIND_MOMENTS:
             raise ValueError(f"not a moments blob (kind={kind})")
+        if params != cls._LAYOUT:
+            # layout 1 (empty params) stored (sum, sum2) in the same two
+            # slots: reading it as (mean, M2) would give wrong stats
+            raise ValueError(
+                f"moments blob: unsupported layout {params.hex() or 'empty'}; "
+                "only layout 2 (mean, M2) is readable — blobs of the old "
+                "(sum, sum-of-squares) layout 1 must be rebuilt"
+            )
         payload = bytes(payload)
         if len(payload) != cls._PAYLOAD.size:
             raise ValueError(

@@ -1,7 +1,7 @@
 """Binary blob format shared by all sketches.
 
-A sketch crossing the JVM boundary (mapInPandas output, treeAggregate
-partials, broadcast variables, checkpoint files) is a self-describing blob:
+A sketch crossing the JVM boundary (fold and merge-tree partials,
+broadcast variables, checkpoint files) is a self-describing blob:
 
     header:  magic 4s = b"SKB1" | version u8 | kind u8 | flags u16
              seed u64 | n_added u64 | param_len u32
@@ -86,7 +86,7 @@ def _register_all() -> None:
     """Import every sketch module so its @register decorator runs.  Needed
     when a merge task deserializes a blob in a python worker that never ran
     a build stage (registration otherwise rides the pickled factory's class
-    import, which a bytes-only treeAggregate combiner doesn't carry)."""
+    import, which a bytes-only merge task doesn't carry)."""
     import importlib
 
     for mod in (

@@ -17,8 +17,8 @@ k overflows, θ drops to the (k+1)-th smallest hash and the estimate is
 
 The state is a pure function of the SET of distinct key hashes, so merge is
 commutative, associative, and idempotent — bit-identical under ANY merge
-topology, like Bloom's OR and HLL's max (build.py routes it through the
-treeAggregate fast path).  Set operations follow the standard theta
+topology, like Bloom's OR and HLL's max (any shape of the build engine's
+merge tree gives the same bits).  Set operations follow the standard theta
 semantics: θ_result = min(θ_a, θ_b), retained = the set-op applied to the
 operands' retained sets below θ_result.  Intersection/difference estimates
 are unbiased with variance growing as the overlap shrinks (Dasgupta et al.

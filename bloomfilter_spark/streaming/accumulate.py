@@ -19,8 +19,8 @@ Compaction sketches (KLL / t-digest) fold one merge per micro-batch,
 so their compaction schedule — and therefore the exact retained items —
 depends on the batch boundaries; the result honors the same published
 rank-error bound as any merge topology (the defined semantic at scale,
-see tree_merge_blobs), it just isn't byte-equal to the single n-ary
-batch merge.  The stream≡batch pytest pins bit-identity for the
+see operators/pipeline.py), it just isn't byte-equal to one batch
+build.  The stream≡batch pytest pins bit-identity for the
 commutative families and bound-equivalence for the compaction ones.
 """
 

@@ -3,12 +3,13 @@
 Local contracts first (zero FN after deletes, to_bloom bit-identity with a
 plain Bloom over the net key set, signed-delta merge algebra), then the
 distributed build path including deletes landing in different partitions
-than their inserts and the >64-partition treeAggregate merge.
+than their inserts and a >64-partition build with a distributed merge round.
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 import pytest
 
 from bloomfilter_spark.sketches import serde
@@ -153,8 +154,8 @@ def test_build_with_deletes_matches_local(spark):
 
 
 def test_build_with_deletes_treeaggregate_path(spark):
-    # >64 partitions exercises the commutative treeAggregate merge; the
-    # blobs deserialize in merge-only workers (serde lazy registration)
+    # >64 partitions exercises a distributed merge round; the blobs
+    # deserialize in merge-only workers (serde lazy registration)
     from bloomfilter_spark.operators.build import (
         build_sketch_with_deletes,
         cbf_factory,
@@ -173,6 +174,26 @@ def test_build_with_deletes_treeaggregate_path(spark):
     assert np.array_equal(dist.counts, local.counts)
     odd = np.arange(1, n, 2, dtype=np.int64)
     assert dist.contains(odd).all()
+
+
+def test_build_multi_cbf_string_keys_matches_local(spark):
+    """A counting-Bloom spec over a string column folds through the
+    hashed-key path (null keys skipped), next to a plain Bloom spec."""
+    from bloomfilter_spark.operators.build import bloom_factory, cbf_factory
+    from bloomfilter_spark.operators.pipeline import build_multi
+
+    keys = [f"key-{i}" for i in range(3000)]
+    df = spark.createDataFrame(
+        [(k,) for k in keys] + [(None,)], "key string"
+    ).repartition(4)
+    factory = cbf_factory(3000, 0.01)
+    got = build_multi(
+        df, {"cbf": ("key", factory), "bloom": ("key", bloom_factory(3000, 0.01))}
+    )
+    local = factory()
+    local.update(pd.Series(keys))
+    assert np.array_equal(got["cbf"].counts, local.counts)
+    assert got["cbf"].n_added == len(keys)
 
 
 def test_catalog_query_invariants(spark):

@@ -108,6 +108,16 @@ def test_full_resume_no_rescan(spark, pages, tmp_path):
     assert sk1.to_bytes() == sk2.to_bytes()
 
 
+def test_checkpointed_kll_over_fanin_matches_build_sketch(spark, tmp_path):
+    """Above the merge fan-in a checkpointed compaction-sketch build merges
+    through the same tree as build_sketch, so the bits are the same."""
+    df = spark.range(0, 20_000, 1, 72).selectExpr("cast(id * 7 % 1009 as double) as v")
+    factory = kll_factory(k=200)
+    sk, lineage = build_sketch_checkpointed(df, "v", factory, str(tmp_path / "k"))
+    assert lineage.count() == 72
+    assert sk.to_bytes() == build_sketch(df, "v", factory).to_bytes()
+
+
 @pytest.mark.parametrize("fanin", [None, 2])
 def test_build_multi_kill_and_resume_bit_identical(spark, pages, tmp_path, fanin):
     """The SUITE path (one-scan multi-sketch) must honor the same resume
@@ -283,6 +293,15 @@ def test_build_multi_manifest_guard(spark, pages, tmp_path):
     other = {"bloom_url": ("url", bloom_factory(65536, 0.01))}
     with pytest.raises(ValueError, match="different suite build"):
         build_multi_checkpointed(feats, other, ckpt)
+    # a directory of the retired single-sketch writer is refused, not misread
+    import json
+
+    old = str(tmp_path / "old_writer")
+    os.makedirs(old)
+    with open(os.path.join(old, "MANIFEST.json"), "w") as f:
+        json.dump({"cols": ["url"], "n_parts": 8, "sketch_header": "00"}, f)
+    with pytest.raises(ValueError, match="different suite build"):
+        build_sketch_checkpointed(feats, "url", bloom_factory(2048, 0.01), old)
 
 
 def test_incomplete_checkpoint_detected(spark, pages, tmp_path):

@@ -58,6 +58,14 @@ class TestMomentsSketch:
         with pytest.raises(ValueError, match="MomentsSketch"):
             MomentsSketch().merge(StringStatsSketch())
 
+    def test_old_sum_layout_rejected(self):
+        # layout 1: empty params, (sum, sum-of-squares) of [1, 2, 3] in
+        # the slots layout 2 reads as (mean, M2)
+        payload = MomentsSketch._PAYLOAD.pack(3, 0, 1.0, 3.0, 6.0, 14.0)
+        old = serde.pack(serde.KIND_MOMENTS, 0, 3, b"", payload)
+        with pytest.raises(ValueError, match="layout 1"):
+            serde.deserialize(old)
+
 
 class TestStringStatsSketch:
     def test_fold_and_merge(self):

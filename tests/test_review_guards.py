@@ -232,18 +232,20 @@ def test_page_features_keep_bare_domain_host(spark):
 
 
 def test_tree_aggregate_many_partitions_matches_local(spark):
-    """The commutative treeAggregate path (empty-bytes zero sentinel) over
-    more partitions than the merge fan-in must equal a local build."""
+    """A commutative build equals a local build at any partition count:
+    below the merge fan-in (driver merge only) and above it (a distributed
+    merge round)."""
     import numpy as np
 
     from bloomfilter_spark.operators.build import bloom_factory, build_sketch
     from bloomfilter_spark.sketches.bloom import BloomFilter
 
-    df = spark.range(0, 5000).repartition(100)
-    dist = build_sketch(df, "id", bloom_factory(10_000, 0.01))
     local = BloomFilter.create(10_000, 0.01)
     local.update(np.arange(5000, dtype=np.int64))
-    assert dist.to_bytes() == local.to_bytes()
+    for parts in (4, 100, 160):
+        df = spark.range(0, 5000).repartition(parts)
+        dist = build_sketch(df, "id", bloom_factory(10_000, 0.01))
+        assert dist.to_bytes() == local.to_bytes(), parts
 
 
 def test_sketch_sizing_and_serde_validation():
@@ -375,23 +377,15 @@ def test_corpus_overlap_exact_emits_disjoint_pairs(spark):
 
 
 def test_blocked_factory_tagged_and_treeaggregate_path(spark):
-    """blocked_bloom_factory must carry the KIND tag (merge_partials
-    would otherwise materialize the full giant filter on the driver just
-    to read it) and ride the commutative treeAggregate path bit-identically
-    to a local build."""
-    from bloomfilter_spark.operators.build import (
-        _COMMUTATIVE_KINDS,
-        build_sketch,
-    )
-    from bloomfilter_spark.sketches import serde
+    """A blocked Bloom build over more partitions than the merge fan-in
+    (a distributed merge round) is bit-identical to a local build."""
+    from bloomfilter_spark.operators.build import build_sketch
     from bloomfilter_spark.sketches.blocked import (
         BlockedBloomFilter,
         blocked_bloom_factory,
     )
 
     fac = blocked_bloom_factory(10_000, 0.01)
-    assert getattr(fac, "KIND", None) == serde.KIND_BBLOOM
-    assert serde.KIND_BBLOOM in _COMMUTATIVE_KINDS
     df = spark.range(0, 4000).repartition(100)  # > merge fan-in
     dist = build_sketch(df, "id", fac)
     local = fac()

@@ -24,14 +24,13 @@ from bloomfilter_spark.operators.build import (
     cms_factory,
     hll_factory,
     kll_factory,
-    merge_partials,
-    partial_build,
     tdigest_factory,
 )
 from bloomfilter_spark.operators.membership import (
     bloom_semi_join,
     filter_might_contain,
 )
+from bloomfilter_spark.operators.pipeline import fold_partials, tree_merge_replay
 from bloomfilter_spark.sketches import serde
 from bloomfilter_spark.sketches.bloom import BloomFilter
 
@@ -39,6 +38,12 @@ from bloomfilter_spark.sketches.bloom import BloomFilter
 @pytest.fixture(scope="module")
 def docs_pdf(documents):
     return documents.toPandas()
+
+
+def _partial_pairs(df, col, factory) -> list[tuple[int, bytes]]:
+    """(partition_id, packed partial) of a one-sketch build's fold stage."""
+    partials, _ = fold_partials(df, {"s": (col, factory)})
+    return [(int(r.partition_id), bytes(r.s)) for r in partials.collect()]
 
 
 def test_distributed_bloom_bit_identical_to_local(spark, documents, docs_pdf):
@@ -116,12 +121,14 @@ def test_distributed_tdigest(spark, events):
 
 
 def test_partial_counters(spark, documents):
-    partials = partial_build(documents.repartition(4), "text", bloom_factory(1000))
+    # 16 ≥ the session's parallelism, so the engine keeps the partitioning
+    partials, n_parts = fold_partials(
+        documents.repartition(16), {"bloom": ("text", bloom_factory(1000))}
+    )
     pdf = partials.toPandas()
-    assert len(pdf) == 4
+    assert n_parts == len(pdf) == 16
     assert pdf["rows"].sum() == documents.count()
-    assert (pdf["wall_ms"] >= 0).all()
-    assert sorted(pdf["partition_id"].tolist()) == [0, 1, 2, 3]
+    assert sorted(pdf["partition_id"].tolist()) == list(range(16))
 
 
 def test_zero_false_negatives_distributed(spark, documents, docs_pdf):
@@ -210,27 +217,21 @@ def test_kll_tree_merge_512_partitions(spark):
     distributed tree result must be bit-identical to a driver-side replay
     of the same canonical tree (tree_merge_replay), deterministic across
     runs, and honor the rank bound vs exact."""
-    from bloomfilter_spark.operators.build import (
-        tree_merge_replay,
-    )
-
     factory = kll_factory(k=200)
     n = 120_000
     df = spark.range(n).select(
         (F.col("id") * 2654435761 % 1000003).cast("double").alias("v")
     ).repartition(512)
-    partials = partial_build(df, "v", factory)
-    pairs = [
-        (int(r.partition_id), bytes(r.blob))
-        for r in partials.select("partition_id", "blob").collect()
-    ]
+    pairs = _partial_pairs(df, "v", factory)
     assert len(pairs) == 512
-    dist = merge_partials(partials, factory)  # 512 > fanin → tree path
-    replay = tree_merge_replay(pairs, factory, n_parts=512)
+    dist = build_sketch(df, "v", factory)  # 512 > fanin → tree path
+    replay = tree_merge_replay(
+        pairs, factory, 512, spark.sparkContext.defaultParallelism
+    )
     assert dist == replay
     assert dist.to_bytes() == replay.to_bytes()
     # determinism: a second distributed run is bit-identical
-    dist2 = merge_partials(partial_build(df, "v", factory), factory)
+    dist2 = build_sketch(df, "v", factory)
     assert dist.to_bytes() == dist2.to_bytes()
     # rank bound vs exact
     exact = np.sort(
@@ -245,19 +246,15 @@ def test_kll_tree_merge_512_partitions(spark):
 
 
 def test_tdigest_tree_merge_matches_replay(spark):
-    from bloomfilter_spark.operators.build import tree_merge_replay
-
     factory = tdigest_factory(delta=100)
     df = spark.range(40_000).select(
         (F.sin(F.col("id").cast("double")) * 1000).alias("v")
     ).repartition(128)
-    partials = partial_build(df, "v", factory)
-    pairs = [
-        (int(r.partition_id), bytes(r.blob))
-        for r in partials.select("partition_id", "blob").collect()
-    ]
-    dist = merge_partials(partials, factory)
-    replay = tree_merge_replay(pairs, factory, n_parts=128)
+    pairs = _partial_pairs(df, "v", factory)
+    dist = build_sketch(df, "v", factory)
+    replay = tree_merge_replay(
+        pairs, factory, 128, spark.sparkContext.defaultParallelism
+    )
     assert dist.to_bytes() == replay.to_bytes()
 
 
@@ -305,10 +302,7 @@ def test_freqitems_distributed_tree_merge(spark):
     (> fanin → canonical tree): bit-identical to the driver replay,
     deterministic run-to-run, underestimate + merged deduction bound +
     ε-heavy completeness vs exact counts, and exact below capacity."""
-    from bloomfilter_spark.operators.build import (
-        freqitems_factory,
-        tree_merge_replay,
-    )
+    from bloomfilter_spark.operators.build import freqitems_factory
 
     # zipf-ish skew from a deterministic expression: key = floor(1e6 / (id%997+1))
     n = 150_000
@@ -316,16 +310,14 @@ def test_freqitems_distributed_tree_merge(spark):
         (F.lit(1_000_000) / (F.col("id") % 997 + 1)).cast("long").alias("k")
     ).repartition(256)
     factory = freqitems_factory(64)
-    partials = partial_build(df, "k", factory)
-    pairs = [
-        (int(r.partition_id), bytes(r.blob))
-        for r in partials.select("partition_id", "blob").collect()
-    ]
+    pairs = _partial_pairs(df, "k", factory)
     assert len(pairs) == 256
-    dist = merge_partials(partials, factory)
-    replay = tree_merge_replay(pairs, factory, n_parts=256)
+    dist = build_sketch(df, "k", factory)
+    replay = tree_merge_replay(
+        pairs, factory, 256, spark.sparkContext.defaultParallelism
+    )
     assert dist.to_bytes() == replay.to_bytes()
-    dist2 = merge_partials(partial_build(df, "k", factory), factory)
+    dist2 = build_sketch(df, "k", factory)
     assert dist.to_bytes() == dist2.to_bytes()
 
     ids = np.arange(n, dtype=np.int64)
@@ -343,7 +335,7 @@ def test_freqitems_distributed_tree_merge(spark):
 
     # capacity ≥ distinct (997 keys) → every count exact through the same path
     wide = freqitems_factory(2048)
-    exact = merge_partials(partial_build(df, "k", wide), wide)
+    exact = build_sketch(df, "k", wide)
     assert exact.error_bound() == 0
     assert all(exact.estimate(int(k)) == c for k, c in vc.items())
 
@@ -403,7 +395,7 @@ def test_freqitems_grouped_salted(spark):
 
 
 def test_theta_distributed_commutative_path(spark, documents, docs_pdf):
-    """Theta rides the commutative treeAggregate path: distributed build
+    """Theta merges commutatively: distributed build
     == local single-process build, bit-identical, under any partitioning;
     set ops on two filter-pruned distributed builds are exact below k."""
     from bloomfilter_spark.operators.build import theta_factory
@@ -453,7 +445,7 @@ def test_theta_grouped_rollup_equals_global(spark, documents):
 
 
 def test_distributed_dds_bit_identical_to_local(spark, events):
-    """DDSketch is a pure histogram, so the distributed treeAggregate build
+    """DDSketch is a pure histogram, so the distributed build
     must equal a single-process build EXACTLY (bit-identity, not bounds) —
     at any partitioning."""
     from bloomfilter_spark.operators.build import dds_factory
@@ -572,3 +564,43 @@ def test_rollup_sliding_trailing_windows(spark):
         want.update(trail.user)
         got = serde.deserialize(bytes(out.loc[d, "blob"]))
         assert (got.registers == want.registers).all(), d
+
+
+def test_driver_merge_holds_two_unpacked_blooms(monkeypatch):
+    """The n-ary merge of a bucket unpacks, merges and drops one Bloom
+    partial at a time: at most the accumulator and one partial are alive
+    (a bucket of 64 partials of a 1.2 GB filter would otherwise need 77 GB).
+    Driver-side only, no Spark."""
+    import weakref
+
+    from bloomfilter_spark.operators import pipeline
+
+    factory = bloom_factory(100_000, 0.01)
+    rng = np.random.default_rng(3)
+    expect = factory()
+    rows = []
+    for pid in range(64):
+        part = factory()
+        part.update(rng.integers(0, 2**62, 200, dtype=np.int64))
+        expect.merge(part)
+        rows.append((pid, pipeline._pack(part)))
+
+    refs: list = []
+    peak = 0
+
+    def tracked(make):
+        def make_tracked(*args):
+            nonlocal peak
+            sk = make(*args)
+            refs.append(weakref.ref(sk.words))
+            peak = max(peak, sum(r() is not None for r in refs))
+            return sk
+
+        return make_tracked
+
+    monkeypatch.setattr(pipeline, "_unpack", tracked(pipeline._unpack))
+    pdf = pd.DataFrame(rows[::-1], columns=["partition_id", "bloom"])
+    merged = pipeline._nary_merge_pdf(pdf, ["bloom"], {"bloom": tracked(factory)})
+    assert len(refs) == 65
+    assert peak <= 2
+    assert merged["bloom"].to_bytes() == expect.to_bytes()

@@ -12,7 +12,7 @@ so the pin is behavioral, on the same inserted key set and the same
   * observed FPP on a disjoint probe set inside the same <=2x acceptance
     band the reference's own test gate uses
     (/root/reference/bloomfilter_test.go false-positive-rate assertions);
-  * the distributed treeAggregate build path produces the same behavioral
+  * the distributed build path produces the same behavioral
     answers as the single-shot local build.
 
 This guards against a whole class of self-consistent bugs (e.g. a hashing
@@ -100,7 +100,7 @@ def test_string_membership_matches_spark_builtin(spark, int_keys):
 
 
 def test_local_build_behaviorally_equals_distributed(spark, int_keys):
-    """The treeAggregate path and a single local update() must answer every
+    """The distributed build and a single local update() must answer every
     present/absent probe identically — bit-identity is already pinned in
     test_spark_build.py; this keeps the behavioral contract visible next to
     the cross-engine pin."""
