@@ -9,9 +9,13 @@ A weighted build is a spec with a weight column; a counting-Bloom build
 with deletes is the same spec over a signed-delta stream.
 
 Grouped sketches (`build_grouped`) fold one sketch per key with a
-groupBy/applyInPandas; the rollups merge those per-key blobs into coarser
-groups, trailing windows, or one sketch (`rollup_grouped`, which reduces
-through the engine's merge tree).
+groupBy/applyInArrow through the engine's own fold
+(`pipeline._fold_partition`), so a grouped sketch consumes its column by
+the same rule as a global build.  The rollups merge those per-key blobs
+into coarser groups, trailing windows, or one sketch (`rollup_grouped`,
+which reduces through the engine's merge tree); every group merge is an
+applyInArrow task that merges its blobs in a canonical sorted order
+(`_merge_sorted`).
 
 All hashing/bit-setting is vectorized numpy inside the UDF; no per-row
 Python anywhere (input_hint, BASELINE.json:15).
@@ -22,6 +26,8 @@ from __future__ import annotations
 from typing import Callable
 
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame
 
@@ -39,14 +45,6 @@ from bloomfilter_spark.sketches.theta import ThetaSketch
 DEFAULT_FANIN = 64
 
 
-def _numeric_update(sketch, series: pd.Series) -> None:
-    """KLL/t-digest/DDSketch consume float values; others consume hashed keys."""
-    if isinstance(sketch, (KLLSketch, TDigest, DDSketch)):
-        sketch.update(series.dropna().to_numpy(dtype="float64"))
-    else:
-        sketch.update(series.dropna())
-
-
 def _merge_blobs(acc, blobs, load=serde.deserialize):
     """Merge serialized sketches into `acc`.  Kinds with merge_all take the
     whole list at once (their result is a pure function of the multiset,
@@ -59,6 +57,14 @@ def _merge_blobs(acc, blobs, load=serde.deserialize):
         for b in blobs:
             acc.merge(load(b))
     return acc
+
+
+def _merge_sorted(tbl, order: list[str], factory: Callable[[], object]):
+    """Merge one group's `blob` column in canonical `order`: shuffle fetch
+    order varies run to run, so the merge order of a compaction sketch
+    must come from the data."""
+    tbl = tbl.sort_by([(c, "ascending") for c in order])
+    return _merge_blobs(factory(), tbl.column("blob").to_pylist())
 
 
 def build_sketch(df: DataFrame, col: str, factory: Callable[[], object]):
@@ -121,7 +127,7 @@ def build_grouped(
 ) -> DataFrame:
     """Per-key sketch blobs: (key..., blob, rows).
 
-    salts=0: single groupBy(key).applyInPandas — one shuffle on key.
+    salts=0: single groupBy(key).applyInArrow — one shuffle on key.
     salts=s>0 (skew defense, north rule): two-stage aggregation —
       stage 1 groups by (key, hash(value) % s) so a hot key fans out over s
       tasks building partial sketches; stage 2 merges the ≤s partials per
@@ -146,6 +152,8 @@ def build_grouped(
     """
     from pyspark.sql import functions as F
 
+    from bloomfilter_spark.operators.pipeline import _fold_partition
+
     if isinstance(key_cols, str):
         key_cols = [key_cols]
     key_schema_src = df.select(*key_cols).schema
@@ -153,43 +161,42 @@ def build_grouped(
     out_schema = f"{key_ddl}, blob binary, rows long"
     partial_schema = f"{key_ddl}, `_salt` bigint, blob binary, rows long"
 
-    def build_group(pdf: pd.DataFrame) -> pd.DataFrame:
+    def build_group(tbl: pa.Table, head: list[str]) -> pa.Table:
+        # the sorted values as ONE batch: one fold call per group, so a
+        # compaction sketch sees the same single update whatever the
+        # shuffle's chunking
+        vals = tbl.column(value_col)
+        rb = pa.record_batch(
+            [vals.take(pc.sort_indices(vals)).combine_chunks()], names=[value_col]
+        )
         sk = factory()
-        _numeric_update(sk, pdf[value_col].sort_values(kind="stable"))
-        out = {c: [pdf[c].iloc[0]] for c in key_cols}
+        _fold_partition([rb], {"s": sk}, {"s": value_col}, {})
+        out = {c: tbl.column(c).slice(0, 1) for c in head}
         out["blob"] = [sk.to_bytes()]
-        out["rows"] = [len(pdf)]
-        return pd.DataFrame(out)
+        out["rows"] = [tbl.num_rows]
+        return pa.table(out)
 
     if salts <= 1:
         return (
             df.select(*key_cols, value_col)
             .groupBy(*key_cols)
-            .applyInPandas(build_group, schema=out_schema)
+            .applyInArrow(lambda t: build_group(t, key_cols), schema=out_schema)
         )
 
     salted = df.select(*key_cols, value_col).withColumn(
         "_salt", F.pmod(F.xxhash64(F.col(value_col)), F.lit(salts))
     )
-
-    def build_salted(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = build_group(pdf.drop(columns=["_salt"]))
-        out.insert(len(key_cols), "_salt", [int(pdf["_salt"].iloc[0])])
-        return out
-
-    partials = salted.groupBy(*key_cols, "_salt").applyInPandas(
-        build_salted, schema=partial_schema
+    partials = salted.groupBy(*key_cols, "_salt").applyInArrow(
+        lambda t: build_group(t, [*key_cols, "_salt"]), schema=partial_schema
     )
 
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("_salt")  # canonical partial order
-        acc = _merge_blobs(factory(), pdf["blob"])
-        out = {c: [pdf[c].iloc[0]] for c in key_cols}
-        out["blob"] = [acc.to_bytes()]
-        out["rows"] = [int(pdf["rows"].sum())]
-        return pd.DataFrame(out)
+    def merge_group(tbl: pa.Table) -> pa.Table:
+        out = {c: tbl.column(c).slice(0, 1) for c in key_cols}
+        out["blob"] = [_merge_sorted(tbl, ["_salt"], factory).to_bytes()]
+        out["rows"] = [pc.sum(tbl.column("rows")).as_py()]
+        return pa.table(out)
 
-    return partials.groupBy(*key_cols).applyInPandas(merge_group, schema=out_schema)
+    return partials.groupBy(*key_cols).applyInArrow(merge_group, schema=out_schema)
 
 
 def rollup_grouped(
@@ -239,18 +246,18 @@ def rollup_grouped(
         "__bucket", F.pmod(F.xxhash64(F.col("__key_str")), F.lit(n_buckets))
     )
 
-    def merge_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        # (key_str, blob) sort fully canonicalizes even hash-equal keys
-        pdf = pdf.sort_values(["__key_str", "blob"], kind="stable")
-        return pd.DataFrame(
+    def merge_bucket(tbl: pa.Table) -> pa.Table:
+        # (key_str, blob) order fully canonicalizes even hash-equal keys
+        merged = _merge_sorted(tbl, ["__key_str", "blob"], factory)
+        return pa.table(
             {
-                "partition_id": [int(pdf["__bucket"].iloc[0])],
-                "sketch": [_pack(_merge_blobs(factory(), pdf["blob"]))],
-                "rows": [len(pdf)],
+                "partition_id": tbl.column("__bucket").slice(0, 1),
+                "sketch": [_pack(merged)],
+                "rows": [tbl.num_rows],
             }
         )
 
-    partials = bucketed.groupBy("__bucket").applyInPandas(
+    partials = bucketed.groupBy("__bucket").applyInArrow(
         merge_bucket, schema="partition_id long, sketch binary, rows long"
     )
     par = grouped_blobs.sparkSession.sparkContext.defaultParallelism
@@ -266,7 +273,7 @@ def rollup_regroup(
     factory: Callable[[], object],
 ) -> DataFrame:
     """Merge fine-group sketch blobs into COARSER groups (day → week,
-    host → domain, shard → tenant) in ONE applyInPandas pass — the
+    host → domain, shard → tenant) in ONE applyInArrow pass — the
     hierarchy rollup that `rollup_grouped` (all groups → one sketch)
     doesn't cover.
 
@@ -291,14 +298,16 @@ def rollup_regroup(
         F.col(coarse_col), key_str.alias("__fine"), "blob"
     )
 
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["__fine", "blob"], kind="stable")
-        merged = _merge_blobs(factory(), pdf["blob"])
-        return pd.DataFrame(
-            {coarse_col: [pdf[coarse_col].iloc[0]], "blob": [merged.to_bytes()]}
+    def merge(tbl: pa.Table) -> pa.Table:
+        merged = _merge_sorted(tbl, ["__fine", "blob"], factory)
+        return pa.table(
+            {
+                coarse_col: tbl.column(coarse_col).slice(0, 1),
+                "blob": [merged.to_bytes()],
+            }
         )
 
-    return src.groupBy(coarse_col).applyInPandas(
+    return src.groupBy(coarse_col).applyInArrow(
         merge, schema=f"`{coarse_col}` {coarse_type}, blob binary"
     )
 
@@ -354,20 +363,19 @@ def rollup_sliding(
     units = src.select(F.col("__u").alias("__target")).distinct()
     fanned = fanned.join(units, "__target")
 
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["__fine", "blob"], kind="stable")
-        merged = _merge_blobs(factory(), pdf["blob"])
-        return pd.DataFrame(
+    def merge(tbl: pa.Table) -> pa.Table:
+        merged = _merge_sorted(tbl, ["__fine", "blob"], factory)
+        return pa.table(
             {
-                "__target": [pdf["__target"].iloc[0]],
-                "n_units": [pdf["__fine"].nunique()],
+                "__target": tbl.column("__target").slice(0, 1),
+                "n_units": [pc.count_distinct(tbl.column("__fine")).as_py()],
                 "blob": [merged.to_bytes()],
             }
         )
 
     return (
         fanned.groupBy("__target")
-        .applyInPandas(merge, schema="__target long, n_units long, blob binary")
+        .applyInArrow(merge, schema="__target long, n_units long, blob binary")
         .withColumnRenamed("__target", unit_col)
     )
 

@@ -59,18 +59,6 @@ def _perm_params(num_perm: int, seed: int) -> tuple[np.ndarray, np.ndarray]:
 # ---------------------------------------------------------------------------
 
 
-def shingles_col(text_col: str, n: int = 3):
-    """Distinct word n-gram shingles as an array column — pure Catalyst.
-
-    NOTE: `text_col` here should be a MATERIALIZED token-array column when
-    used in a hot path — referencing split() directly makes the tokenizer
-    re-evaluate under the transform lambda (no CSE through higher-order
-    functions), measured ~1.4× slower.  Project the token array first and use shingles_of_toks for the hot
-    path (as ngram_jaccard_pairs does); this wrapper stays for ad-hoc use."""
-    toks = F.split(F.lower(F.trim(F.col(text_col))), WS_SPLIT_PATTERN)
-    return _shingles_of(toks, n)
-
-
 def shingles_of_toks(toks_col: str, n: int = 3):
     """Shingles from an already-materialized token-array column."""
     return _shingles_of(F.col(toks_col), n)

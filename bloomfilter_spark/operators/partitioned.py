@@ -59,18 +59,12 @@ def bloom_build_sharded(
     seed: int | None = None,
 ) -> DataFrame:
     """(shard, blob, n_keys) — one Bloom per shard, sized n_expected/n_shards."""
-    from bloomfilter_spark.functions.hashing import DEFAULT_SEED
+    from bloomfilter_spark.operators.build import bloom_factory
 
-    per_shard = max(1024, n_expected // n_shards)
-    s = DEFAULT_SEED if seed is None else seed
-    # size once, capture only scalars — a prototype in the closure would
-    # pickle its full zero words array into every executor's task binary
-    _sized = BloomFilter.create(per_shard, fpp, seed=s)
-    m, k = _sized.m, _sized.k
-    del _sized
+    new_filter = bloom_factory(max(1024, n_expected // n_shards), fpp, seed)
 
     def build_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = BloomFilter(m, k, s)
+        sk = new_filter()
         keys = pdf[_KEY_COL].dropna()
         if len(keys):
             sk.update(keys)

@@ -83,12 +83,14 @@ def _plan(df: DataFrame, specs: dict[str, tuple]):
 
 def _fold_partition(
     batches,
-    names: list[str],
-    factories: dict[str, Callable[[], object]],
+    sks: dict[str, object],
     col_of: dict[str, str],
     weight_of: dict[str, str],
-) -> tuple[dict[str, object], int]:
-    """Fold one partition's Arrow batches into every spec's sketch.
+) -> int:
+    """Fold Arrow batches into every named sketch in `sks`; returns the
+    number of rows folded.  This is the library's one rule for how a sketch
+    consumes a column: the global builds, the grouped builds and the
+    stateful streams all fold through it.
 
     Batches are raw `pyarrow.RecordBatch`es (mapInArrow): the hash kernels
     read the Arrow string/binary buffers zero-copy, so skipping the
@@ -103,9 +105,8 @@ def _fold_partition(
 
     from bloomfilter_spark.functions.hashing import hash_any
 
-    sks = {n: factories[n]() for n in names}
     by_col: dict[str, list[str]] = {}
-    for n in names:
+    for n in sks:
         by_col.setdefault(col_of[n], []).append(n)
     rows = 0
     for rb in batches:
@@ -142,7 +143,7 @@ def _fold_partition(
                         )
                     )
         rows += rb.num_rows
-    return sks, rows
+    return rows
 
 
 def fold_partials(
@@ -162,7 +163,8 @@ def fold_partials(
 
         from pyspark import TaskContext
 
-        sks, rows = _fold_partition(batches, names, factories, col_of, weight_of)
+        sks = {n: factories[n]() for n in names}
+        rows = _fold_partition(batches, sks, col_of, weight_of)
         ctx = TaskContext.get()
         out = {"partition_id": [ctx.partitionId() if ctx is not None else -1]}
         out.update({n: [_pack(sks[n])] for n in names})
@@ -313,9 +315,8 @@ def build_multi_checkpointed(
                 nbytes += int(rb.nbytes)
                 yield rb
 
-        sks, rows = _fold_partition(
-            counted(batches), names, factories, col_of, weight_of
-        )
+        sks = {n: factories[n]() for n in names}
+        rows = _fold_partition(counted(batches), sks, col_of, weight_of)
         wall_ms = (time.perf_counter() - t0) * 1000.0
         payload = pickle.dumps(
             {"rows": rows, "blobs": {n: _pack(sks[n]) for n in names}},

@@ -16,7 +16,7 @@ value-for-value.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from bloomfilter_spark.operators.build import (
     bloom_factory,
@@ -24,6 +24,7 @@ from bloomfilter_spark.operators.build import (
     build_sketch,
     cms_factory,
     freqitems_factory,
+    grouped_estimates,
     hll_factory,
     kll_factory,
     tdigest_factory,
@@ -307,12 +308,7 @@ def q_hll_users_by_day(spark: SparkSession, sf_dir: str) -> DataFrame:
         "day", F.coalesce(F.date_format("ts", "yyyy-MM-dd"), F.lit("(none)"))
     )
     grouped = build_grouped(ev, "day", "user_id", hll_factory(precision=14))
-
-    @F.pandas_udf(T.DoubleType())
-    def _est(blobs):
-        return blobs.map(lambda b: float(serde.deserialize(b).estimate()))
-
-    ests = grouped.select("day", _est("blob").alias("est"))
+    ests = grouped_estimates(grouped).select("day", F.col("estimate").alias("est"))
     exact = ev.groupBy("day").agg(F.countDistinct("user_id").alias("exact_users"))
     bound = 4 * (1.04 / (2**14) ** 0.5)
     return (
@@ -370,12 +366,7 @@ def q_hll_users_trailing_7d(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     blobs = build_grouped(ev, "day", "user_id", hll_factory(precision=14))
     trailing = rollup_sliding(blobs, "day", 7, hll_factory(precision=14))
-
-    @F.pandas_udf(T.DoubleType())
-    def _est(blobs_s):
-        return blobs_s.map(lambda b: float(serde.deserialize(b).estimate()))
-
-    ests = trailing.select("day", _est("blob").alias("est"))
+    ests = grouped_estimates(trailing).select("day", F.col("estimate").alias("est"))
     pairs = ev.select("day", "user_id").distinct()
     fan = pairs.select(
         F.explode(
@@ -429,10 +420,7 @@ def q_hll_rollup_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from bloomfilter_spark.operators.build import (
-        grouped_estimates,
-        rollup_regroup,
-    )
+    from bloomfilter_spark.operators.build import rollup_regroup
 
     ev = _t(spark, sf_dir, "events").withColumn(
         "day", F.coalesce(F.date_format("ts", "yyyy-MM-dd"), F.lit("(none)"))
@@ -562,12 +550,9 @@ def q_hll_users_by_type_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     grouped = build_grouped(
         ev, "event_type", "user_id", hll_factory(precision=14), salts=8
     )
-
-    @F.pandas_udf(T.DoubleType())
-    def _est(blobs):
-        return blobs.map(lambda b: float(serde.deserialize(b).estimate()))
-
-    ests = grouped.select("event_type", _est("blob").alias("est"))
+    ests = grouped_estimates(grouped).select(
+        "event_type", F.col("estimate").alias("est")
+    )
     exact = ev.groupBy("event_type").agg(
         F.countDistinct("user_id").alias("exact_users")
     )

@@ -20,17 +20,15 @@ Two operators on top of the sketch monoids:
   watermark are filtered by Spark before the operator ever sees them —
   the standard late-data contract, expressed over sketches.
 
+Both fold each micro-batch through the build engine's own fold
+(`pipeline._fold_partition`): the state function's pandas slices are
+handed back to Arrow with the value column's type from the stream schema,
+so a sketch consumes a streamed column by the same rule as a batch build.
+
 Determinism: commutative sketches (Bloom/HLL/CMS) are bit-identical to a
 batch build over the same rows regardless of micro-batch slicing — the
 streaming tests pin that.  Compaction sketches (KLL/t-digest) depend on
 the batch slicing (documented; their bounds still hold).
-
-API note: Spark 4's successor API (transformWithStateInPandas +
-StatefulProcessor) requires google.protobuf in the Python runtime, which
-this container lacks (STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE).
-`grouped_sketch_stream_tws` below is the port of the per-key operator to
-that API (ValueState blob), gated behind `tws_available()`; its pytest
-skips when the runtime can't load it.
 """
 
 from __future__ import annotations
@@ -39,19 +37,30 @@ from typing import Callable, Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.pandas.types import to_arrow_type
 
-from bloomfilter_spark.operators.build import _numeric_update
+from bloomfilter_spark.operators.build import bloom_factory
+from bloomfilter_spark.operators.pipeline import _fold_partition
 from bloomfilter_spark.sketches import serde
 
 
-def _fold_state(sketch, pdfs: Iterator[pd.DataFrame], value_col: str) -> int:
-    rows = 0
-    for pdf in pdfs:
-        _numeric_update(sketch, pdf[value_col])
-        rows += len(pdf)
-    return rows
+def _fold_state(
+    sketch, pdfs: Iterator[pd.DataFrame], value_col: str, value_type: pa.DataType
+) -> int:
+    """Fold a key's micro-batch slices into `sketch`; returns rows folded.
+    The explicit Arrow type keeps a slice whose values are all NULL typed
+    (inferred, it would become pa.null(), which no sketch consumes)."""
+    schema = pa.schema([(value_col, value_type)])
+    batches = (
+        pa.RecordBatch.from_pandas(
+            pdf[[value_col]], schema=schema, preserve_index=False
+        )
+        for pdf in pdfs
+    )
+    return _fold_partition(batches, {"s": sketch}, {"s": value_col}, {})
 
 
 def _estimate_of(sketch) -> float:
@@ -104,13 +113,7 @@ def streaming_first_seen(
     rendering, not pandas repr (str(None) == "None" would otherwise
     collide a null with the literal string "None").
     """
-    from bloomfilter_spark.sketches.bloom import BloomFilter
-
-    # size once, capture only scalars: a prototype in the update closure
-    # would pickle its full zero words array into the streaming task binary
-    _sized = BloomFilter.create(max(1024, n_expected // n_shards), fpp)
-    _m, _k, _s = _sized.m, _sized.k, _sized.seed
-    del _sized
+    new_filter = bloom_factory(max(1024, n_expected // n_shards), fpp)
     out_schema = ", ".join(
         f"`{f.name}` {f.dataType.simpleString()}" for f in stream_df.schema
     )
@@ -138,7 +141,7 @@ def streaming_first_seen(
         if state.exists:
             sk = serde.deserialize(bytes(state.get[0]))
         else:
-            sk = BloomFilter(_m, _k, _s)
+            sk = new_filter()
         for pdf in pdfs:
             keys = pdf["__key_str"]
             pdf = pdf.drop(columns=["__shard", "__key_str"])
@@ -181,6 +184,7 @@ def grouped_sketch_stream(
         f"`{key_col}` {key_ddl}, rows_total long, estimate double, blob binary"
     )
     state_schema = "blob binary, rows long"
+    value_type = to_arrow_type(stream_df.schema[value_col].dataType)
 
     def update(key, pdfs, state):
         if state.exists:
@@ -188,7 +192,7 @@ def grouped_sketch_stream(
             sk = serde.deserialize(bytes(blob))
         else:
             sk, rows = factory(), 0
-        rows += _fold_state(sk, pdfs, value_col)
+        rows += _fold_state(sk, pdfs, value_col, value_type)
         blob = sk.to_bytes()  # serialize once: state and output share it
         state.update((blob, rows))
         yield pd.DataFrame(
@@ -206,78 +210,6 @@ def grouped_sketch_stream(
         stateStructType=state_schema,
         outputMode="update",
         timeoutConf="NoTimeout",
-    )
-
-
-def tws_available() -> bool:
-    """True when the transformWithStateInPandas runtime can load: the API
-    ships with Spark 4 but its Python worker speaks protobuf to the state
-    server, so `google.protobuf` must be importable."""
-    try:
-        import google.protobuf  # noqa: F401
-        from pyspark.sql.streaming import StatefulProcessor  # noqa: F401
-
-        return True
-    except Exception:
-        return False
-
-
-def grouped_sketch_stream_tws(
-    stream_df: DataFrame,
-    key_col: str,
-    value_col: str,
-    factory: Callable[[], object],
-) -> DataFrame:
-    """`grouped_sketch_stream` on the Spark 4 successor API
-    (transformWithStateInPandas + StatefulProcessor): the per-key running
-    sketch lives in a ValueState blob instead of the GroupState tuple.
-    Output contract is identical — (key, rows_total, estimate, blob) per
-    key per trigger, update mode.  Raises when the runtime is unavailable
-    (gate with tws_available(); the pytest skips in that case)."""
-    if not tws_available():
-        raise RuntimeError(
-            "transformWithStateInPandas runtime unavailable "
-            "(google.protobuf not importable)"
-        )
-    from pyspark.sql.streaming import StatefulProcessor
-
-    key_ddl = stream_df.schema[key_col].dataType.simpleString()
-    out_schema = (
-        f"`{key_col}` {key_ddl}, rows_total long, estimate double, blob binary"
-    )
-
-    class _SketchProcessor(StatefulProcessor):
-        def init(self, handle):
-            self._state = handle.getValueState(
-                "sketch", "blob binary, rows long"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            if self._state.exists():
-                blob, n = self._state.get()
-                sk, n = serde.deserialize(bytes(blob)), int(n)
-            else:
-                sk, n = factory(), 0
-            n += _fold_state(sk, rows, value_col)
-            blob = sk.to_bytes()  # serialize once: state and output share it
-            self._state.update((blob, n))
-            yield pd.DataFrame(
-                {
-                    key_col: [key[0]],
-                    "rows_total": [n],
-                    "estimate": [_estimate_of(sk)],
-                    "blob": [blob],
-                }
-            )
-
-        def close(self):
-            pass
-
-    return stream_df.groupBy(key_col).transformWithStateInPandas(
-        statefulProcessor=_SketchProcessor(),
-        outputStructType=out_schema,
-        outputMode="Update",
-        timeMode="None",
     )
 
 
@@ -321,6 +253,7 @@ def windowed_sketch_stream(
         "window_start_s long, rows long, estimate double, blob binary"
     )
     state_schema = "blob binary, rows long"
+    value_type = to_arrow_type(stream_df.schema[value_col].dataType)
 
     def update(key, pdfs, state):
         if state.hasTimedOut:
@@ -343,7 +276,7 @@ def windowed_sketch_stream(
             sk = serde.deserialize(bytes(blob))
         else:
             sk, rows = factory(), 0
-        rows += _fold_state(sk, pdfs, value_col)
+        rows += _fold_state(sk, pdfs, value_col, value_type)
         state.update((sk.to_bytes(), rows))
         # finalize when the watermark passes this window's end (epoch ms)
         state.setTimeoutTimestamp((int(key[0]) + window_seconds) * 1000)
@@ -395,13 +328,8 @@ def streaming_first_seen_windowed(
     no (key, window) identity: always emitted, never inserted.
     """
     from bloomfilter_spark.operators.sessions import _epoch_us
-    from bloomfilter_spark.sketches.bloom import BloomFilter
 
-    _sized = BloomFilter.create(
-        max(1024, n_expected_per_window // n_shards), fpp
-    )
-    _m, _k, _s = _sized.m, _sized.k, _sized.seed
-    del _sized
+    new_filter = bloom_factory(max(1024, n_expected_per_window // n_shards), fpp)
     if order_cols is None:
         order_cols = [ts_col]
     out_schema = ", ".join(
@@ -466,7 +394,7 @@ def streaming_first_seen_windowed(
                 keys = pdf["__key_str"].iloc[cand]
                 sk = ring.get(g)
                 if sk is None:
-                    sk = ring[g] = BloomFilter(_m, _k, _s)
+                    sk = ring[g] = new_filter()
                     novel = np.ones(len(cand), dtype=bool)
                 else:
                     novel = ~sk.contains(keys)

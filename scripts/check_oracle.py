@@ -10,6 +10,7 @@ runs only the extended set.  Default: the graded window.
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
@@ -45,7 +46,7 @@ def main() -> int:
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
     only = set(argv[1:])
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entrymod
     from bloomfilter_spark.plans.session import get_spark
 
@@ -54,8 +55,6 @@ def main() -> int:
     # parallelism / shuffle-partition count (the property that matters at
     # 1000 executors).  Swept green at local[3]/5, local[8]/8 (default)
     # and local[32]/32 on the final round-5 code.
-    import os
-
     spark = get_spark(
         app_name="oracle-check",
         master=os.environ.get("ORACLE_MASTER", "local[8]"),

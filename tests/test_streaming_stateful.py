@@ -77,6 +77,42 @@ def test_grouped_stream_equals_batch_grouped(spark, staged_events, tmp_path):
         assert int(row["rows_total"]) == int(b_by.loc[row["event_type"], "rows"])
 
 
+def test_grouped_stream_all_null_slice(spark, tmp_path):
+    """A key whose micro-batch slice is all NULL folds nothing for that
+    trigger but still counts its rows: the slice reaches the fold typed as
+    the stream's string column (not Arrow's null type), and the final
+    per-key state equals a batch grouped build over the same rows."""
+    src = str(tmp_path / "nsrc")
+    batches = [
+        [("a", "u1"), ("a", "u2"), ("b", "u1")],
+        [("a", None), ("a", None), ("b", "u3")],  # key a: all NULL
+        [("a", "u4"), ("b", None)],
+    ]
+    for rows in batches:
+        spark.createDataFrame(rows, "g string, user string").coalesce(1).write.mode(
+            "append"
+        ).parquet(src)
+    fac = hll_factory(precision=12)
+    out = _run(
+        spark,
+        src,
+        lambda s: grouped_sketch_stream(s, "g", "user", fac),
+        "null_slice",
+        str(tmp_path / "ck_null"),
+        "update",
+    )
+    final = out.loc[out.groupby("g")["rows_total"].idxmax()].set_index("g")
+    batch = build_grouped(spark.read.parquet(src), "g", "user", fac)
+    b_by = batch.toPandas().set_index("g")
+    assert sorted(final.index) == ["a", "b"]
+    assert final["rows_total"].to_dict() == {"a": 5, "b": 3}
+    for g in ("a", "b"):
+        s_stream = serde.deserialize(bytes(final.loc[g, "blob"]))
+        s_batch = serde.deserialize(bytes(b_by.loc[g, "blob"]))
+        assert (s_stream.registers == s_batch.registers).all(), g
+    assert round(final.loc["a", "estimate"]) == 3
+
+
 def test_streaming_first_seen_dedup(spark, tmp_path):
     """Bloom-backed ingest dedup: no key emitted twice (zero false
     negatives ⇒ perfect suppression), ≥ (1 - a few·fpp) of distinct keys
@@ -165,43 +201,6 @@ def test_windowed_stream_finalizes_on_watermark(spark, tmp_path):
     assert abs(got[w0]["estimate"] - 3) < 0.2
     # exactly-once: one row per finalized window
     assert len(out) == 2
-
-
-def test_grouped_sketch_stream_tws(spark, staged_events, tmp_path):
-    """The transformWithStateInPandas port must match the
-    applyInPandasWithState operator's final per-key state.  Skips when the
-    runtime can't load the API (google.protobuf absent — this container)."""
-    from bloomfilter_spark.streaming.stateful import (
-        grouped_sketch_stream_tws,
-        tws_available,
-    )
-
-    if not tws_available():
-        pytest.skip(
-            "transformWithStateInPandas runtime unavailable "
-            "(google.protobuf not importable)"
-        )
-    fac = hll_factory(precision=12)
-    out = _run(
-        spark,
-        staged_events,
-        lambda s: grouped_sketch_stream_tws(
-            s.select("event_type", "user_id"), "event_type", "user_id", fac
-        ),
-        "grp_sketches_tws",
-        str(tmp_path / "ck_tws"),
-        "update",
-    )
-    final = out.loc[out.groupby("event_type")["rows_total"].idxmax()]
-    batch = build_grouped(
-        spark.read.parquet(staged_events), "event_type", "user_id", fac
-    ).toPandas()
-    b_by = batch.set_index("event_type")
-    assert set(final["event_type"]) == set(batch["event_type"])
-    for _, row in final.iterrows():
-        s_stream = serde.deserialize(bytes(row["blob"]))
-        s_batch = serde.deserialize(bytes(b_by.loc[row["event_type"], "blob"]))
-        assert (s_stream.registers == s_batch.registers).all()
 
 
 def test_streaming_topk_equals_batch_exact(spark, staged_events, tmp_path):
