@@ -2,7 +2,7 @@
 surface over the one build engine (operators/pipeline.py).
 
 `build_sketch`, `build_sketch_weighted` and `build_sketch_with_deletes` are
-one-spec calls of `pipeline.build_multi`: an Arrow fold per partition, zlib
+one-spec calls of `pipeline.build_multi`: an Arrow fold per partition, zstd
 partials, a deterministic bounded-fan-in merge tree and a driver merge
 (SURVEY.md §3.4 lifecycle: partial build → associative merge → finalize).
 A weighted build is a spec with a weight column; a counting-Bloom build

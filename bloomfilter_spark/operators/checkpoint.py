@@ -22,8 +22,9 @@ and no Python worker is spent on it.  A build with nothing pending runs no
 fold job.  The merge stage always reads the complete set of partials in
 sorted-partition order through the build's own merge tree (bit-identical
 results whether the build ran once or resumed five times).  A MANIFEST
-pins the columns, sketch geometry, partition count and merge-tree shape;
-a directory written by a different build is refused with a ValueError.
+pins the columns, sketch geometry, partition count, merge-tree shape and
+partial codec; a directory written by a different build is refused with a
+ValueError.
 
 Correctness requirements on the caller:
 - the input DataFrame's partitioning must be split-stable across runs:

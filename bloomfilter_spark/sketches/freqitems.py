@@ -340,12 +340,23 @@ class FrequentItemsSketch:
         sk.key_type = key_type
         sk.total = int(total)
         sk.n_added = int(n_added)
+        # exactly 8n count bytes, then 8n int keys or 4n lengths + the keys
+        if key_type == KEY_STR and len(payload) >= 12 * n:
+            lens = np.frombuffer(payload[8 * n : 12 * n], dtype=np.int32)
+            ok = (lens >= 0).all() and (
+                len(payload) == 12 * n + int(lens.sum(dtype=np.int64))
+            )
+        else:
+            ok = key_type != KEY_STR and len(payload) == 16 * n
+        if not ok:
+            raise ValueError(
+                f"freqitems blob: {len(payload)} payload bytes do not match "
+                f"the {n} counters it declares (truncated or corrupt)"
+            )
         counts = np.frombuffer(payload[: 8 * n], dtype=np.int64)
         if key_type == KEY_STR:
-            lens = np.frombuffer(payload[8 * n : 12 * n], dtype=np.int32)
-            blob_off = 12 * n
+            raw = bytes(payload[12 * n :])
             keys = []
-            raw = bytes(payload[blob_off:])
             pos = 0
             for ln in lens:
                 keys.append(raw[pos : pos + ln].decode("utf-8"))

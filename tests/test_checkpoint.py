@@ -302,6 +302,16 @@ def test_build_multi_manifest_guard(spark, pages, tmp_path):
         json.dump({"cols": ["url"], "n_parts": 8, "sketch_header": "00"}, f)
     with pytest.raises(ValueError, match="different suite build"):
         build_sketch_checkpointed(feats, "url", bloom_factory(2048, 0.01), old)
+    # a directory whose partials predate the zstd codec has no codec key in
+    # its MANIFEST; the resume refuses it before any fold or merge job
+    man = os.path.join(ckpt, "MANIFEST.json")
+    with open(man) as f:
+        prev = json.load(f)
+    del prev["codec"]
+    with open(man, "w") as f:
+        json.dump(prev, f)
+    with pytest.raises(ValueError, match="different suite build"):
+        build_multi_checkpointed(feats, specs, ckpt)
 
 
 def test_incomplete_checkpoint_detected(spark, pages, tmp_path):

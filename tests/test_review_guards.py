@@ -252,6 +252,7 @@ def test_sketch_sizing_and_serde_validation():
     import struct
 
     from bloomfilter_spark.sketches import serde
+    from bloomfilter_spark.sketches.freqitems import FrequentItemsSketch
     from bloomfilter_spark.sketches.hll import HyperLogLog
     from bloomfilter_spark.sketches.kll import KLLSketch
     from bloomfilter_spark.sketches.theta import ThetaSketch
@@ -271,6 +272,18 @@ def test_sketch_sizing_and_serde_validation():
     tb = th.to_bytes()
     with pytest.raises(ValueError, match="truncated"):
         ThetaSketch.from_bytes(tb[:-8])
+    # a cut freq-items blob raises instead of shortening its host names
+    fi = FrequentItemsSketch(1024)
+    fi.update(pd.Series([f"h{i % 900}.gamma.net" for i in range(20_000)]))
+    fb = fi.to_bytes()
+    assert FrequentItemsSketch.from_bytes(fb) == fi
+    for cut in (1, 3, 8, 16, len(fb) // 3):
+        with pytest.raises(ValueError, match="truncated or corrupt"):
+            FrequentItemsSketch.from_bytes(fb[:-cut])
+    fi_int = FrequentItemsSketch(64)
+    fi_int.update(np.arange(1000, dtype=np.int64) % 50)
+    with pytest.raises(ValueError, match="truncated or corrupt"):
+        FrequentItemsSketch.from_bytes(fi_int.to_bytes()[:-8])
     # blob cut inside the params region gets the clear truncation error
     hdr_size = struct.calcsize("<4sBBBxQQI")
     h = HyperLogLog(p=8)

@@ -671,3 +671,84 @@ def test_driver_merge_holds_two_unpacked_blooms(monkeypatch):
     assert len(refs) == 65
     assert peak <= 2
     assert merged["bloom"].to_bytes() == expect.to_bytes()
+
+
+_PARTIAL_ROWS = 20_000
+
+
+@pytest.fixture(scope="module")
+def packed_partials() -> dict:
+    """One partial per pages-suite kind, each folded from one Arrow batch
+    through the engine's fold, plus a dense Bloom partial: one of 4 splits
+    of a 4M-key build (1M keys, ~14% of its bits set).  No Spark."""
+    import pyarrow as pa
+
+    from bloomfilter_spark.operators import pipeline
+
+    rng = np.random.default_rng(7)
+    n = _PARTIAL_ROWS
+    hosts = np.array([f"h{i}.gamma.net" for i in range(300)], dtype=object)
+    host = hosts[rng.zipf(1.5, n) % len(hosts)]
+    rb = pa.RecordBatch.from_pydict(
+        {
+            "url": [f"https://{h}/p/{i}" for i, h in enumerate(host)],
+            "text_hash": rng.integers(-(2**63), 2**63 - 1, n, dtype=np.int64),
+            "host": list(host),
+            "lang": list(rng.choice(["en", "de", "ja", "fr"], n)),
+            "text_len": rng.integers(0, 5000, n, dtype=np.int64),
+        }
+    )
+    specs = pipeline.pages_suite_specs(n)
+    sks = {name: spec[1]() for name, spec in specs.items()}
+    pipeline._fold_partition([rb], sks, {k: v[0] for k, v in specs.items()}, {})
+    dense = bloom_factory(4_000_000, 0.01)()
+    dense.update(rng.integers(0, 2**62, 1_000_000, dtype=np.int64))
+    sks["bloom_dense"] = dense
+    return sks
+
+
+def test_packed_partials_round_trip(packed_partials):
+    """Every suite kind and a dense Bloom partial come back bit-identical,
+    and packing the same sketch twice gives the same bytes."""
+    from bloomfilter_spark.operators import pipeline
+
+    assert 0.1 < packed_partials["bloom_dense"].stats()["load_factor"] < 0.2
+    for name, sk in packed_partials.items():
+        blob = pipeline._pack(sk)
+        assert pipeline._unpack(blob).to_bytes() == sk.to_bytes(), name
+        assert pipeline._pack(sk) == blob, name
+
+
+def _relength(blob: bytes, n: int) -> bytes:
+    return n.to_bytes(8, "little") + blob[8:]
+
+
+def _raw_len(blob: bytes) -> int:
+    return int.from_bytes(blob[:8], "little")
+
+
+@pytest.mark.parametrize(
+    "damage",
+    [
+        lambda b: b[:5],
+        lambda b: b[:8],
+        lambda b: b[: len(b) // 2],
+        lambda b: b[:-1],
+        lambda b: _relength(b, _raw_len(b) - 1),
+        lambda b: _relength(b, _raw_len(b) + 1),
+        lambda b: _relength(b, 2**62),
+        lambda b: _relength(b, 2**64 - 1),
+    ],
+    ids=["short_prefix", "no_frame", "cut_frame", "cut_1", "len_minus_1",
+         "len_plus_1", "len_huge", "len_max"],
+)
+@pytest.mark.parametrize("name", ["bloom_url", "freq_host"])
+def test_corrupt_packed_partial_names_it(packed_partials, damage, name):
+    """A damaged packed partial raises ValueError naming the partial, on
+    both merge paths (one partial at a time: Bloom; merge_all: freq-items)."""
+    from bloomfilter_spark.operators import pipeline
+
+    factory = pipeline.pages_suite_specs(_PARTIAL_ROWS)[name][1]
+    bad = damage(pipeline._pack(packed_partials[name]))
+    with pytest.raises(ValueError, match=f"packed partial '{name}'.*truncated or corrupt"):
+        pipeline._merge_records([{name: bad}], [name], {name: factory})
