@@ -16,9 +16,9 @@ without leaving SQL.
 What is deliberately NOT here: the raw-key BUILD path.  A pandas
 GROUPED_AGG UDF does no map-side partial aggregation — every raw key would
 shuffle to its group's single reducer — so building sketches from raw
-columns stays with the `operators/build.py` treeAggregate-style operators
-(mapInPandas partials + canonical-order merge).  `sketch_merge` below is
-safe because its inputs are PRE-REDUCED blobs: group sizes are the number
+columns stays with the build engine (`operators/pipeline.py`: mapInArrow
+partials + a canonical-order merge tree).  `sketch_merge` below is safe
+because its inputs are PRE-REDUCED blobs: group sizes are the number
 of sketches per rollup bucket (days per week, partitions per table), which
 is bounded by construction, and every sketch's merge is associative and
 commutative, so reducer order cannot change the result bits.

@@ -13,9 +13,9 @@ groupBy/applyInArrow through the engine's own fold
 (`pipeline._fold_partition`), so a grouped sketch consumes its column by
 the same rule as a global build.  The rollups merge those per-key blobs
 into coarser groups, trailing windows, or one sketch (`rollup_grouped`,
-which reduces through the engine's merge tree); every group merge is an
-applyInArrow task that merges its blobs in a canonical sorted order
-(`_merge_sorted`).
+which reduces through the engine's merge tree).  Every merge in the
+library — group merges, merge-tree rounds, the driver step, the checkpoint
+merge — is `_merge_sorted`: blobs in a canonical sorted order.
 
 All hashing/bit-setting is vectorized numpy inside the UDF; no per-row
 Python anywhere (input_hint, BASELINE.json:15).
@@ -23,6 +23,7 @@ Python anywhere (input_hint, BASELINE.json:15).
 
 from __future__ import annotations
 
+from functools import partial
 from typing import Callable
 
 import pandas as pd
@@ -45,26 +46,38 @@ from bloomfilter_spark.sketches.theta import ThetaSketch
 DEFAULT_FANIN = 64
 
 
-def _merge_blobs(acc, blobs, load=serde.deserialize):
-    """Merge serialized sketches into `acc`.  Kinds with merge_all take the
-    whole list at once (their result is a pure function of the multiset,
-    and their blobs are KB-sized); every other kind merges and drops one
-    blob at a time, so a giant Bloom merge holds 2 sketches, not one per
-    blob."""
-    if hasattr(acc, "merge_all"):
-        acc.merge_all([load(b) for b in blobs])
-    else:
-        for b in blobs:
-            acc.merge(load(b))
-    return acc
+def _merge_sorted(
+    tbl: pa.Table,
+    order: list[str],
+    factories: dict[str, Callable[[], object]],
+    load: Callable | None = None,
+) -> dict[str, object]:
+    """The library's one merge rule: merge each blob column named in
+    `factories` into a fresh sketch, taking rows in canonical `order`.
+    Shuffle fetch order varies run to run, so the merge order of a
+    compaction sketch must come from the data.  `load(blob, name=column)`
+    opens one blob (`pipeline._unpack` for packed partials); None opens a
+    plain serde blob.
 
-
-def _merge_sorted(tbl, order: list[str], factory: Callable[[], object]):
-    """Merge one group's `blob` column in canonical `order`: shuffle fetch
-    order varies run to run, so the merge order of a compaction sketch
-    must come from the data."""
-    tbl = tbl.sort_by([(c, "ascending") for c in order])
-    return _merge_blobs(factory(), tbl.column("blob").to_pylist())
+    The blobs are walked lazily in sort-index order, never copied into a
+    sorted table or a list.  Kinds with merge_all take the whole multiset
+    at once (their result is a pure function of it, and their blobs are
+    KB-sized); every other kind merges and drops one blob at a time, so a
+    giant Bloom merge holds 2 sketches, not one per row."""
+    idx = pc.sort_indices(
+        tbl, sort_keys=[(c, "ascending") for c in order]
+    ).to_pylist()
+    out = {}
+    for name, make in factories.items():
+        col = tbl.column(name)
+        open_ = serde.deserialize if load is None else partial(load, name=name)
+        acc = out[name] = make()
+        if hasattr(acc, "merge_all"):
+            acc.merge_all([open_(col[i].as_buffer()) for i in idx])
+        else:
+            for i in idx:
+                acc.merge(open_(col[i].as_buffer()))
+    return out
 
 
 def build_sketch(df: DataFrame, col: str, factory: Callable[[], object]):
@@ -192,7 +205,8 @@ def build_grouped(
 
     def merge_group(tbl: pa.Table) -> pa.Table:
         out = {c: tbl.column(c).slice(0, 1) for c in key_cols}
-        out["blob"] = [_merge_sorted(tbl, ["_salt"], factory).to_bytes()]
+        merged = _merge_sorted(tbl, ["_salt"], {"blob": factory})["blob"]
+        out["blob"] = [merged.to_bytes()]
         out["rows"] = [pc.sum(tbl.column("rows")).as_py()]
         return pa.table(out)
 
@@ -233,7 +247,11 @@ def rollup_grouped(
     """
     from pyspark.sql import functions as F
 
-    from bloomfilter_spark.operators.pipeline import _merge_tree, _pack
+    from bloomfilter_spark.operators.pipeline import (
+        _merge_tree,
+        _partial_row,
+        _row_schema,
+    )
 
     if isinstance(key_cols, str):
         key_cols = [key_cols]
@@ -248,22 +266,16 @@ def rollup_grouped(
 
     def merge_bucket(tbl: pa.Table) -> pa.Table:
         # (key_str, blob) order fully canonicalizes even hash-equal keys
-        merged = _merge_sorted(tbl, ["__key_str", "blob"], factory)
-        return pa.table(
-            {
-                "partition_id": tbl.column("__bucket").slice(0, 1),
-                "sketch": [_pack(merged)],
-                "rows": [tbl.num_rows],
-            }
-        )
+        merged = _merge_sorted(tbl, ["__key_str", "blob"], {"blob": factory})
+        bucket = tbl.column("__bucket")[0].as_py()
+        row = _partial_row(bucket, {"sketch": merged["blob"]}, tbl.num_rows)
+        return pa.Table.from_batches([row])
 
     partials = bucketed.groupBy("__bucket").applyInArrow(
-        merge_bucket, schema="partition_id long, sketch binary, rows long"
+        merge_bucket, schema=_row_schema(["sketch"])
     )
     par = grouped_blobs.sparkSession.sparkContext.defaultParallelism
-    return _merge_tree(
-        partials, ["sketch"], {"sketch": factory}, n_buckets, fanin, par
-    )["sketch"]
+    return _merge_tree(partials, {"sketch": factory}, n_buckets, fanin, par)["sketch"]
 
 
 def rollup_regroup(
@@ -299,7 +311,7 @@ def rollup_regroup(
     )
 
     def merge(tbl: pa.Table) -> pa.Table:
-        merged = _merge_sorted(tbl, ["__fine", "blob"], factory)
+        merged = _merge_sorted(tbl, ["__fine", "blob"], {"blob": factory})["blob"]
         return pa.table(
             {
                 coarse_col: tbl.column(coarse_col).slice(0, 1),
@@ -364,7 +376,7 @@ def rollup_sliding(
     fanned = fanned.join(units, "__target")
 
     def merge(tbl: pa.Table) -> pa.Table:
-        merged = _merge_sorted(tbl, ["__fine", "blob"], factory)
+        merged = _merge_sorted(tbl, ["__fine", "blob"], {"blob": factory})["blob"]
         return pa.table(
             {
                 "__target": tbl.column("__target").slice(0, 1),

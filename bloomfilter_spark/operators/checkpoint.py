@@ -11,10 +11,12 @@ pieces it shares with that writer's callers: the atomic write, the partial
 file names, the driver-side resume plan (`fold_pending`) and progress
 inspection (`checkpoint_progress`).
 
-Mechanism: each fold task writes its partition's partial blobs to
-``<ckpt_dir>/partial-<pid>.bin`` (tmp-file + atomic rename — a crashed task
-leaves no half-written partial) plus a ``lineage-<pid>.json`` sidecar with
-counters (rows, input_bytes, wall_ms).  The resume decision is the
+Mechanism: each fold task writes its partition's partial row (the row
+`pipeline.fold_partials` emits: partition_id, one packed blob per spec,
+rows) to ``<ckpt_dir>/partial-<pid>.bin`` as one Arrow IPC stream
+(tmp-file + atomic rename — a crashed task leaves no half-written partial)
+plus a ``lineage-<pid>.json`` sidecar with counters (rows, input_bytes,
+wall_ms).  The resume decision is the
 driver's (`fold_pending`): it lists the durable partials first and
 launches the fold job over the pending partition ids only, so a finished
 partition gets no task at all — its split is never scheduled, never read,
@@ -22,9 +24,9 @@ and no Python worker is spent on it.  A build with nothing pending runs no
 fold job.  The merge stage always reads the complete set of partials in
 sorted-partition order through the build's own merge tree (bit-identical
 results whether the build ran once or resumed five times).  A MANIFEST
-pins the columns, sketch geometry, partition count, merge-tree shape and
-partial codec; a directory written by a different build is refused with a
-ValueError.
+pins the columns, sketch geometry, partition count, merge-tree shape,
+partial codec and file layout; a directory written by a different build
+(or by the earlier pickle-file writer) is refused with a ValueError.
 
 Correctness requirements on the caller:
 - the input DataFrame's partitioning must be split-stable across runs:

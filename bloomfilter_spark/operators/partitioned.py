@@ -6,10 +6,11 @@ scaling concern, /root/reference/docs/future/FUTURE_PAGED_ARRAY_OPTIMIZATION.md:
 The Spark-native answer is sharding by key hash:
 
 - build: rows route to `shard = xxhash64(key) % n_shards`; one Bloom per
-  shard built with groupBy(shard).applyInPandas (each shard sized for its
-  expected n/n_shards keys).  The shard table (shard, blob) lives as a
-  DataFrame — persist it as parquet and it doubles as the filter's
-  durable serialized form.
+  shard, folded from the JVM-cast key strings by the build engine's fold
+  (`pipeline._fold_partition`) in a groupBy(shard).applyInArrow task (each
+  shard sized for its expected n/n_shards keys).  The shard table
+  (shard, blob) lives as a DataFrame — persist it as parquet and it
+  doubles as the filter's durable serialized form.
 - probe: probes route by the same hash, then a **cogrouped**
   applyInPandas pairs each shard's probe rows with that shard's single
   blob row — the blob crosses the wire once per shard, never per row.
@@ -21,7 +22,10 @@ single filter (each key is answered by exactly the shard that inserted it).
 
 from __future__ import annotations
 
+from typing import Callable
+
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -50,6 +54,37 @@ def _with_shard(df: DataFrame, col: str, n_shards: int) -> DataFrame:
     )
 
 
+def _build_shards(
+    keyed: DataFrame,
+    head: dict[str, str],
+    make_filter: Callable[[int], BloomFilter],
+    n_shards: int,
+) -> DataFrame:
+    """One Bloom per group of `keyed` (grouped by `head`'s source columns),
+    folded from `_KEY_COL` by the build engine's fold.  `head` maps output
+    column -> source column; `make_filter(n)` sizes a shard's filter from
+    its non-null key count.  Rows: (*head, blob, n_keys, n_shards)."""
+    from bloomfilter_spark.operators.pipeline import _fold_partition
+
+    def build_shard(tbl: pa.Table) -> pa.Table:
+        keys = tbl.column(_KEY_COL)
+        n_keys = len(keys) - keys.null_count
+        sk = make_filter(n_keys)
+        _fold_partition(
+            tbl.select([_KEY_COL]).to_batches(), {"s": sk}, {"s": _KEY_COL}, {}
+        )
+        out = {c: tbl.column(src).slice(0, 1) for c, src in head.items()}
+        out.update(blob=[sk.to_bytes()], n_keys=[n_keys], n_shards=[n_shards])
+        return pa.table(out)
+
+    types = dict(keyed.dtypes)
+    head_ddl = ", ".join(f"`{c}` {types[src]}" for c, src in head.items())
+    return keyed.groupBy(*head.values()).applyInArrow(
+        build_shard,
+        schema=f"{head_ddl}, blob binary, n_keys long, n_shards long",
+    )
+
+
 def bloom_build_sharded(
     df: DataFrame,
     col: str,
@@ -62,28 +97,11 @@ def bloom_build_sharded(
     from bloomfilter_spark.operators.build import bloom_factory
 
     new_filter = bloom_factory(max(1024, n_expected // n_shards), fpp, seed)
-
-    def build_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = new_filter()
-        keys = pdf[_KEY_COL].dropna()
-        if len(keys):
-            sk.update(keys)
-        return pd.DataFrame(
-            {
-                "shard": [int(pdf[_SHARD_COL].iloc[0])],
-                "blob": [sk.to_bytes()],
-                "n_keys": [len(keys)],
-                "n_shards": [n_shards],
-            }
-        )
-
-    return (
-        _with_shard(df.select(col), col, n_shards)
-        .groupBy(_SHARD_COL)
-        .applyInPandas(
-            build_shard,
-            schema="shard long, blob binary, n_keys long, n_shards long",
-        )
+    return _build_shards(
+        _with_shard(df.select(col), col, n_shards),
+        {"shard": _SHARD_COL},
+        lambda n_keys: new_filter(),
+        n_shards,
     )
 
 
@@ -205,33 +223,11 @@ def bloom_build_sharded_grouped(
     from bloomfilter_spark.functions.hashing import DEFAULT_SEED
 
     s = DEFAULT_SEED if seed is None else seed
-
-    def build_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        keys = pdf[_KEY_COL].dropna()
-        sk = BloomFilter.create(max(1024, len(keys)), fpp, seed=s)
-        if len(keys):
-            sk.update(keys)
-        return pd.DataFrame(
-            {
-                "group": [pdf[group_col].iloc[0]],
-                "shard": [int(pdf[_SHARD_COL].iloc[0])],
-                "blob": [sk.to_bytes()],
-                "n_keys": [len(keys)],
-                "n_shards": [n_shards],
-            }
-        )
-
-    gtype = dict(df.dtypes)[group_col]
-    return (
-        _with_shard(df.select(group_col, col), col, n_shards)
-        .groupBy(group_col, _SHARD_COL)
-        .applyInPandas(
-            build_shard,
-            schema=(
-                f"group {gtype}, shard long, blob binary, "
-                "n_keys long, n_shards long"
-            ),
-        )
+    return _build_shards(
+        _with_shard(df.select(group_col, col), col, n_shards),
+        {"group": group_col, "shard": _SHARD_COL},
+        lambda n_keys: BloomFilter.create(max(1024, n_keys), fpp, seed=s),
+        n_shards,
     )
 
 

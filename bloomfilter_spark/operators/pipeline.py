@@ -10,14 +10,16 @@ Misra-Gries heavy-hitter hosts, KLL + t-digest + DDSketch over text length)
 share one parquet scan and one JVM→Python Arrow hop:
 
   fold:   `fold_partials` — one mapInArrow task per partition folds its
-          Arrow batches into one partial per spec and emits one row
-          (partition_id, one packed blob per spec, rows)
+          Arrow batches into one partial per spec and emits one partial
+          row (partition_id, one packed blob per spec, rows)
   rounds: while more partials remain than the final fan-in, bucket =
-          partition_id // step and each bucket merges n-ary in sorted
-          partition_id order (applyInPandas); `_merge_steps` picks the
-          steps
-  driver: ≤ fan-in rows collected, n-ary merge in sorted order
+          partition_id // step and each bucket (applyInArrow) merges in
+          sorted partition_id order; `_merge_steps` picks the steps
+  driver: ≤ fan-in rows collected as Arrow, merged in sorted order
 
+The partial row is the only shape a partial has: checkpoint files hold one
+each, and every merge — tree rounds, the driver step, `tree_merge_replay`,
+the checkpoint merge and the grouped rollups — is `build._merge_sorted`.
 The tree never materializes more than `fanin` blobs in one task and never
 ships all P partials to the driver (P ≈ 800k at 100 TB / 128 MB splits), and
 bucket composition + intra-bucket order are pure functions of partition_id —
@@ -28,35 +30,28 @@ the same tree on the driver.  Commutative sketches (Bloom OR / HLL max /
 CMS and counting-Bloom sums) are bit-identical under any merge order anyway
 (the reference's Union semantics, bloomfilter.go:209-213).
 
-Every partial that leaves a task — fold rows, merge-round rows, checkpoint
-partial files, `tree_merge_replay` levels and the `rollup_grouped` bucket
-stage — is packed by `_pack` (zstd level 1) and read back by `_unpack`.
-Merges see only the unpacked bytes, so the codec never changes a result.
-How much packing saves depends on partial density.  A build over P splits
-puts ~1/P of the keys in each partial.  With many splits the partials are
-sparse: a 4.8 MB Bloom sized for 4M keys holding 16k packs ~21× (224 KB).
-At one split per core they are dense: the same Bloom holding 1M keys
-(~14% of its bits set) packs only to 61% (2.93 MB).  On a 4-core box that
-dense partial packs in 7-13 ms and unpacks in 4-8 ms; deflate level 1,
-the codec before zstd, took 160-230 ms and 42-55 ms and packed it to 69%.
+Every packed blob is made by `_pack` (zstd level 1) and read back by
+`_unpack`; merges see only the unpacked bytes, so the codec never changes
+a result.  Sparse partials (many splits) pack ~20×; a dense one at one
+split per core packs to ~61% (BENCH.md §20).
 """
 
 from __future__ import annotations
 
+import itertools
 import math
 import struct
-from functools import partial
-from typing import Callable, Iterable, Iterator
+from typing import Callable
 
-import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame, functions as F
 
 from bloomfilter_spark.functions.urls import host_of
 from bloomfilter_spark.operators.build import (
     DEFAULT_FANIN,
-    _merge_blobs,
+    _merge_sorted,
     bloom_factory,
     cms_factory,
     dds_factory,
@@ -69,12 +64,13 @@ from bloomfilter_spark.sketches import serde
 
 # A packed partial is an 8-byte little-endian raw length (pyarrow's
 # decompress needs the size), then one zstd level-1 frame (deterministic
-# for a given input).  Sparse partials (many splits, ~1/P of the keys each)
-# pack ~20×; a dense one at one split per core packs to ~61% — numbers in
-# the module docstring.
+# for a given input).
 _CODEC = pa.Codec("zstd", compression_level=1)
 # recorded in checkpoint MANIFESTs: partial files packed otherwise are refused
 PACK_CODEC = f"{_CODEC.name}-{_CODEC.compression_level}"
+# how a checkpoint partial file is laid out: one `_partial_row` as an Arrow
+# IPC stream (recorded in MANIFESTs; a dir of another layout is refused)
+PARTIAL_LAYOUT = "arrow-ipc-stream"
 _RAW_LEN = struct.Struct("<Q")
 
 
@@ -182,34 +178,46 @@ def _fold_partition(
     return rows
 
 
+def _partial_row(pid: int, sks: dict[str, object], rows: int) -> pa.RecordBatch:
+    """The one shape a partial has, from fold task to driver: (partition_id,
+    one packed blob per spec name, rows)."""
+    return pa.RecordBatch.from_pydict(
+        {"partition_id": [pid], **{n: [_pack(sk)] for n, sk in sks.items()},
+         "rows": [rows]}
+    )
+
+
+def _row_schema(names: list[str]) -> str:
+    blob_cols = ", ".join(f"`{n}` binary" for n in names)
+    return f"partition_id long, {blob_cols}, rows long"
+
+
+def _fold_row(pid: int, batches, factories, col_of, weight_of) -> pa.RecordBatch:
+    """The one fold task body: a fresh sketch per spec, the partition's
+    batches folded into them, and the partial row they pack into."""
+    sks = {n: make() for n, make in factories.items()}
+    rows = _fold_partition(batches, sks, col_of, weight_of)
+    return _partial_row(pid, sks, rows)
+
+
 def fold_partials(
     df: DataFrame, specs: dict[str, tuple]
 ) -> tuple[DataFrame, int]:
     """The fold stage of `build_multi`: (partials, n_parts).
 
-    `partials` has one row per input partition — partition_id, one
-    packed partial blob per spec name, rows — and is what the merge
-    tree reduces; `tree_merge_replay` takes its (partition_id, blob) pairs."""
-    names = list(specs)
+    `partials` has one `_partial_row` per input partition and is what the
+    merge tree reduces; `tree_merge_replay` takes its (partition_id, blob)
+    pairs."""
     pruned, factories, col_of, weight_of = _plan(df, specs)
-    blob_cols = ", ".join(f"`{n}` binary" for n in names)
 
     def build_iter(batches):
-        import pyarrow as pa
-
         from pyspark import TaskContext
 
-        sks = {n: factories[n]() for n in names}
-        rows = _fold_partition(batches, sks, col_of, weight_of)
         ctx = TaskContext.get()
-        out = {"partition_id": [ctx.partitionId() if ctx is not None else -1]}
-        out.update({n: [_pack(sks[n])] for n in names})
-        out["rows"] = [rows]
-        yield pa.RecordBatch.from_pydict(out)
+        pid = ctx.partitionId() if ctx is not None else -1
+        yield _fold_row(pid, batches, factories, col_of, weight_of)
 
-    partials = pruned.mapInArrow(
-        build_iter, schema=f"partition_id long, {blob_cols}, rows long"
-    )
+    partials = pruned.mapInArrow(build_iter, schema=_row_schema(list(specs)))
     return partials, pruned.rdd.getNumPartitions()
 
 
@@ -231,9 +239,20 @@ def build_multi(
     par = df.sparkSession.sparkContext.defaultParallelism
     factories = {n: s[1] for n, s in specs.items()}
     return _merge_tree(
-        partials, list(specs), factories, n_parts, fanin, par,
-        return_rows=return_rows,
+        partials, factories, n_parts, fanin, par, return_rows=return_rows
     )
+
+
+def _geometry(sk) -> list:
+    """A sketch's kind and scalar state (sizes, seed, parameters, counters),
+    read off the empty sketch a factory makes.  Two factories with the same
+    geometry make partials that merge into the same result; recording it
+    serializes no payload (an empty 10^8-key Bloom's is 120 MB)."""
+    slots = [s for c in type(sk).__mro__ for s in getattr(c, "__slots__", ())]
+    scalars = (bool, int, float, str)
+    return [type(sk).__name__, {
+        s: v for s in slots if isinstance(v := getattr(sk, s, None), scalars)
+    }]
 
 
 def build_multi_checkpointed(
@@ -247,18 +266,20 @@ def build_multi_checkpointed(
     """`build_multi` with per-partition checkpoint/resume — the north-rule
     resume contract (a killed build must NOT rescan completed splits).
 
-    Each fold task atomically writes `partial-<pid>.bin` (all of its
-    sketches' packed partial blobs in one file) plus a lineage sidecar.  On
-    resume the driver lists the partials and runs the fold over the pending
-    partitions only (checkpoint.fold_pending): a finished partition gets no
-    task, so its split is never read, and nothing pending means no fold
-    job.  The merge then reads every partial.  When the tree has no
-    distributed round (n_parts ≤ the final fan-in) the driver opens the
-    partials one file at a time and runs the same n-ary merge build_multi's
-    driver step runs (no Spark job); otherwise the partials are reloaded as
-    a DataFrame (binaryFile source — never a driver glob-read of 800k
-    blobs) and reduced through the same tree as build_multi.  Either way an
-    interrupted-then-resumed build is bit-identical to an uninterrupted one.
+    Each fold task builds the same `_partial_row` `fold_partials` emits and
+    atomically writes it to `partial-<pid>.bin` as one Arrow IPC stream,
+    plus a lineage sidecar.  On resume the driver lists the partials and
+    runs the fold over the pending partitions only
+    (checkpoint.fold_pending): a finished partition gets no task, so its
+    split is never read, and nothing pending means no fold job.  The merge
+    then reads every partial.  When the tree has no distributed round
+    (n_parts ≤ the final fan-in) the driver memory-maps the files and runs
+    the same merge build_multi's driver step runs (no Spark job, and no
+    packed partial copied onto the heap); otherwise the files are reloaded
+    as a DataFrame of partial rows (binaryFile source — never a driver
+    glob-read of 800k blobs) and reduced through the same tree as
+    build_multi.  Either way an interrupted-then-resumed build is
+    bit-identical to an uninterrupted one.
 
     Returns (name -> merged sketch, lineage DataFrame).  Caller contract:
     split-stable input partitioning across runs (a parquet/Iceberg scan;
@@ -277,7 +298,6 @@ def build_multi_checkpointed(
     """
     import json
     import os
-    import pickle
     import time
 
     from bloomfilter_spark.operators.checkpoint import (
@@ -306,8 +326,9 @@ def build_multi_checkpointed(
         "input_pin": input_pin,
         "merge_par": merge_par,
         "codec": PACK_CODEC,
+        "partial": PARTIAL_LAYOUT,
         "sketches": {
-            n: [col_of[n], factories[n]().to_bytes()[:64].hex()]
+            n: [col_of[n], *_geometry(factories[n]())]
             + ([weight_of[n]] if n in weight_of else [])
             for n in names
         },
@@ -335,8 +356,6 @@ def build_multi_checkpointed(
         _atomic_write(man_path, json.dumps(manifest).encode())
 
     def build_iter(batches):
-        import pyarrow as pa
-
         from pyspark import TaskContext
 
         ctx = TaskContext.get()
@@ -352,14 +371,13 @@ def build_multi_checkpointed(
                 nbytes += int(rb.nbytes)
                 yield rb
 
-        sks = {n: factories[n]() for n in names}
-        rows = _fold_partition(counted(batches), sks, col_of, weight_of)
+        row = _fold_row(pid, counted(batches), factories, col_of, weight_of)
+        rows = row.column("rows")[0].as_py()
         wall_ms = (time.perf_counter() - t0) * 1000.0
-        payload = pickle.dumps(
-            {"rows": rows, "blobs": {n: _pack(sks[n]) for n in names}},
-            protocol=4,
-        )
-        _atomic_write(partial_path(ckpt_dir, pid), payload)
+        sink = pa.BufferOutputStream()
+        with pa.ipc.new_stream(sink, row.schema) as w:
+            w.write_batch(row)
+        _atomic_write(partial_path(ckpt_dir, pid), sink.getvalue())
         _atomic_write(
             os.path.join(ckpt_dir, f"lineage-{pid:06d}.json"),
             json.dumps(
@@ -390,41 +408,32 @@ def build_multi_checkpointed(
 
     if not _merge_steps(n_parts, fanin, merge_par):
         # the tree would have no distributed round: its driver step is this
-        # same n-ary merge, so skip the reload job.  One file at a time, so
-        # a giant Bloom merge holds 2 sketches, not n_parts.
-        def read(pid: int) -> dict:
-            with open(partial_path(ckpt_dir, pid), "rb") as f:
-                return pickle.load(f)["blobs"]
+        # same merge, so skip the reload job.  The rows read zero-copy from
+        # memory-mapped files, so their packed blobs stay in the page cache,
+        # off the heap (closing a map defers munmap to its last buffer).
+        def read(pid: int) -> pa.Table:
+            with pa.memory_map(partial_path(ckpt_dir, pid)) as src:
+                return pa.ipc.open_stream(src).read_all()
 
-        recs = (read(pid) for pid in range(n_parts))
-        return _merge_records(recs, names, factories), lineage
+        level = pa.concat_tables([read(pid) for pid in range(n_parts)])
+        return _merge_sorted(level, ["partition_id"], factories, _unpack), lineage
 
-    blob_cols = ", ".join(f"`{n}` binary" for n in names)
-    schema = f"partition_id long, {blob_cols}, rows long"
-    spark = df.sparkSession
-    files = (
-        spark.read.format("binaryFile")
+    def reload_iter(batches):
+        # each file is one partial row, partition id included
+        for rb in batches:
+            for content in rb.column(0):
+                yield from pa.ipc.open_stream(content.as_buffer())
+
+    partials = (
+        df.sparkSession.read.format("binaryFile")
         .option("pathGlobFilter", "partial-*.bin")
         .load(ckpt_dir)
-        .select("path", "content")
+        .select("content")
+        .mapInArrow(reload_iter, schema=_row_schema(names))
     )
-
-    def parse_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols_out = ["partition_id", *names, "rows"]
-        for pdf in batches:
-            recs = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                d = pickle.loads(bytes(content))
-                pid = int(os.path.basename(path)[len("partial-"):-len(".bin")])
-                rec = {"partition_id": pid, "rows": d["rows"]}
-                rec.update(d["blobs"])
-                recs.append(rec)
-            yield pd.DataFrame(recs, columns=cols_out)
-
-    partials = files.mapInPandas(parse_iter, schema=schema)
     # merge_par from the MANIFEST, not the live cluster: the tree shape
     # must match the original build's for bit-identical resumes
-    merged = _merge_tree(partials, names, factories, n_parts, fanin, merge_par)
+    merged = _merge_tree(partials, factories, n_parts, fanin, merge_par)
     return merged, lineage
 
 
@@ -447,74 +456,41 @@ def _merge_steps(n_parts: int, fanin: int | None, parallelism: int) -> list[int]
     return steps
 
 
-def _merge_records(
-    records: Iterable[dict], names: list[str], factories: dict
-) -> dict[str, object]:
-    """n-ary merge of partial records (name -> packed blob), taken in the
-    order given.  Kinds with merge_all get the whole multiset at once
-    (their packed partials are KB-sized); every other kind merges and drops
-    one partial at a time, so at most 2 of its sketches are unpacked at
-    once (a 1.2 GB Bloom × 64 partials would otherwise need 77 GB)."""
-    out = {n: factories[n]() for n in names}
-    held = {n: [] for n in names if hasattr(out[n], "merge_all")}
-    for rec in records:
-        for n in names:
-            if n in held:
-                held[n].append(rec[n])
-            else:
-                out[n].merge(_unpack(rec[n], n))
-    for n, blobs in held.items():
-        _merge_blobs(out[n], blobs, partial(_unpack, name=n))
-    return out
-
-
-def _nary_merge_pdf(
-    pdf: pd.DataFrame, names: list[str], factories: dict
-) -> dict[str, object]:
-    """Merge one bucket of partial rows, sorted by partition_id (canonical
-    order — determinism for compaction sketches)."""
-    recs = pdf.sort_values("partition_id").to_dict("records")
-    return _merge_records(recs, names, factories)
-
-
 def _merge_tree(
     partials: DataFrame,
-    names: list[str],
     factories: dict,
     n_parts: int,
     fanin: int | None,
     parallelism: int,
     return_rows: bool = False,
 ) -> dict[str, object] | tuple[dict[str, object], int]:
-    """Bounded-fan-in reduction of partial rows (partition_id, one packed
-    blob per name, rows): one applyInPandas round per `_merge_steps` step,
-    then the driver merge."""
+    """Bounded-fan-in reduction of partial rows: one applyInArrow round per
+    `_merge_steps` step, then the driver merge.  Every round and the
+    driver step merge by `_merge_sorted` in partition_id order."""
     level = partials
     for step in _merge_steps(n_parts, fanin, parallelism):
 
         def make_merge_bucket(step: int):
-            # applyInPandas gives single-arg callables the group pdf; the
+            # applyInArrow gives single-arg callables the group table; the
             # factory pins this round's `step` (no late binding)
-            def merge_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-                pdf = pdf.drop(columns=["_bucket"])
-                merged = _nary_merge_pdf(pdf, names, factories)
-                out = {"partition_id": [int(pdf["partition_id"].min()) // step]}
-                out.update({n: [_pack(merged[n])] for n in names})
-                out["rows"] = [int(pdf["rows"].sum())]
-                return pd.DataFrame(out)
+            def merge_bucket(tbl: pa.Table) -> pa.Table:
+                merged = _merge_sorted(tbl, ["partition_id"], factories, _unpack)
+                pid = pc.min(tbl.column("partition_id")).as_py() // step
+                rows = pc.sum(tbl.column("rows")).as_py()
+                return pa.Table.from_batches([_partial_row(pid, merged, rows)])
 
             return merge_bucket
 
         level = (
             level.withColumn("_bucket", (F.col("partition_id") / step).cast("long"))
             .groupBy("_bucket")
-            .applyInPandas(make_merge_bucket(step), schema=partials.schema)
+            .applyInArrow(make_merge_bucket(step), schema=partials.schema)
         )
 
-    final_pdf = level.toPandas()
-    merged = _nary_merge_pdf(final_pdf, names, factories)
+    final = level.toArrow()
+    merged = _merge_sorted(final, ["partition_id"], factories, _unpack)
     if return_rows:
-        return merged, int(final_pdf["rows"].sum())
+        return merged, pc.sum(final.column("rows")).as_py() or 0
     return merged
 
 
@@ -532,17 +508,23 @@ def tree_merge_replay(
     n_parts, parallelism and fanin must equal what the build used: the
     round steps come from `_merge_steps` over the DECLARED width, not the
     number of pairs (ids can be sparse)."""
-    names, factories = ["sketch"], {"sketch": factory}
-    pdf = pd.DataFrame(pairs, columns=["partition_id", "sketch"])
-    for step in _merge_steps(n_parts, fanin, parallelism):
-        pdf = pd.DataFrame(
-            [
-                (b, _pack(_nary_merge_pdf(grp, names, factories)["sketch"]))
-                for b, grp in pdf.groupby(pdf["partition_id"] // step)
-            ],
-            columns=["partition_id", "sketch"],
+    factories = {"sketch": factory}
+
+    def merge(level: list[tuple[int, bytes]]):
+        pids, blobs = zip(*level) if level else ((), ())
+        tbl = pa.table(
+            {"partition_id": pa.array(pids, pa.int64()),
+             "sketch": pa.array(blobs, pa.binary())}
         )
-    return _nary_merge_pdf(pdf, names, factories)["sketch"]
+        return _merge_sorted(tbl, ["partition_id"], factories, _unpack)["sketch"]
+
+    level = sorted(pairs, key=lambda p: p[0])
+    for step in _merge_steps(n_parts, fanin, parallelism):
+        level = [
+            (b, _pack(merge(list(bucket))))
+            for b, bucket in itertools.groupby(level, key=lambda p: p[0] // step)
+        ]
+    return merge(level)
 
 
 # ---------------------------------------------------------------------------

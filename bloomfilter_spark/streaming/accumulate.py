@@ -1,7 +1,7 @@
 """Structured Streaming sketch accumulation.
 
 The sketches are mergeable monoids, so streaming needs no new algorithm:
-each micro-batch is a distributed batch build (same mapInPandas partial +
+each micro-batch is a distributed batch build (same mapInArrow partial +
 merge-tree path as batch mode), folded into a running sketch in
 `foreachBatch`.  The reference's "real-time" story is thread-safe inserts
 into a shared array (/root/reference/README.md:69); the Spark-native

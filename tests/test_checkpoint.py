@@ -283,7 +283,7 @@ def test_partial_resume_folds_only_pending(spark, pages, tmp_path, kind):
     assert set(lin.index[~lin.resumed]) == lost
 
 
-def test_build_multi_manifest_guard(spark, pages, tmp_path):
+def test_build_multi_manifest_guard(spark, pages, tmp_path, monkeypatch):
     from bloomfilter_spark.operators.pipeline import build_multi_checkpointed
 
     feats = pages.selectExpr("url", "length(text) as text_len")
@@ -312,6 +312,92 @@ def test_build_multi_manifest_guard(spark, pages, tmp_path):
         json.dump(prev, f)
     with pytest.raises(ValueError, match="different suite build"):
         build_multi_checkpointed(feats, specs, ckpt)
+
+    # A directory of pickled partials (written before partials became
+    # Arrow IPC rows) is refused up front; specs that differ only in fpp,
+    # seed, HLL precision or KLL k are refused; and recording a spec's
+    # geometry serializes no sketch payload.
+    import pickle
+    import re
+
+    from bloomfilter_spark.operators import pipeline
+    from bloomfilter_spark.operators.build import hll_factory
+    from bloomfilter_spark.sketches.bloom import BloomFilter
+
+    specs = {
+        "bloom_url": ("url", bloom_factory(2048, 0.01)),
+        "hll_url": ("url", hll_factory(14)),
+        "kll_len": ("text_len", kll_factory(200)),
+    }
+    ckpt = str(tmp_path / "mckpt3")
+    pipeline.build_multi_checkpointed(feats, specs, ckpt)
+    with open(os.path.join(ckpt, "MANIFEST.json")) as f:
+        written = json.load(f)
+    assert written["partial"] == pipeline.PARTIAL_LAYOUT
+
+    # the same dir as the pickle writer left it: no layout key, each spec
+    # pinned by the first 64 bytes of its empty sketch's blob
+    old = str(tmp_path / "pickled")
+    os.makedirs(old)
+    old_man = {k: v for k, v in written.items() if k != "partial"}
+    old_man["sketches"] = {
+        n: [col, make().to_bytes()[:64].hex()] for n, (col, make) in specs.items()
+    }
+    with open(os.path.join(old, "MANIFEST.json"), "w") as f:
+        json.dump(old_man, f)
+    with open(os.path.join(old, "partial-000000.bin"), "wb") as f:
+        pickle.dump({"rows": 1, "blobs": {n: b"" for n in specs}}, f)
+    with pytest.raises(ValueError, match="different suite build"):
+        pipeline.build_multi_checkpointed(feats, specs, old)
+
+    for name, spec in [
+        ("bloom_url", ("url", bloom_factory(2048, 0.02))),
+        ("bloom_url", ("url", bloom_factory(2048, 0.01, seed=7))),
+        ("hll_url", ("url", hll_factory(12))),
+        ("kll_len", ("text_len", kll_factory(100))),
+    ]:
+        other = {**specs, name: spec}
+        with pytest.raises(ValueError, match="different suite build"):
+            pipeline.build_multi_checkpointed(feats, other, ckpt)
+
+    def no_payload(self):
+        raise AssertionError("manifest serialized a sketch payload")
+
+    # the MANIFEST of a 10^8-key Bloom spec is built (and refused here,
+    # before any job) without serializing the empty filter
+    monkeypatch.setattr(BloomFilter, "to_bytes", no_payload)
+    big = {**specs, "bloom_url": ("url", bloom_factory(10**8, 0.01))}
+    with pytest.raises(ValueError, match=re.escape("'BloomFilter', {'m': 958505984")):
+        pipeline.build_multi_checkpointed(feats, big, ckpt)
+
+
+def test_partial_file_is_the_fold_row(spark, pages, tmp_path):
+    """partial-000000.bin is one Arrow IPC stream holding the row
+    fold_partials emits for partition 0: same schema, same packed blobs."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from bloomfilter_spark.operators.build import hll_factory
+    from bloomfilter_spark.operators.pipeline import (
+        build_multi_checkpointed,
+        fold_partials,
+    )
+
+    feats = pages.selectExpr("url", "length(text) as text_len")
+    specs = {
+        "bloom_url": ("url", bloom_factory(2048, 0.01)),
+        "hll_url": ("url", hll_factory(12)),
+        "kll_len": ("text_len", kll_factory(200)),
+    }
+    ckpt = str(tmp_path / "ckpt")
+    build_multi_checkpointed(feats, specs, ckpt)
+    with open(os.path.join(ckpt, "partial-000000.bin"), "rb") as f:
+        got = pa.ipc.open_stream(f.read()).read_all()
+    partials, _ = fold_partials(feats, specs)
+    want = partials.toArrow().filter(pc.field("partition_id") == 0)
+    assert got.schema == want.schema
+    assert got.num_rows == 1
+    assert got.to_pylist() == want.to_pylist()
 
 
 def test_incomplete_checkpoint_detected(spark, pages, tmp_path):

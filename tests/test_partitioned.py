@@ -201,3 +201,67 @@ def test_sharded_probe_rejects_multi_blob_shards(spark):
         sharded_might_contain(
             probes, "key", sa.unionAll(sb), n_shards=2
         ).collect()
+
+
+def test_shard_blobs_equal_local_filters_over_cast_keys(spark):
+    """Each shard blob, flat and grouped, is exactly a local BloomFilter
+    updated with that shard's JVM-cast key strings: int keys render as
+    '123', NULL keys are skipped, and the flat layout sizes every shard
+    n_expected // n_shards while the grouped one sizes from the shard's
+    non-null key count."""
+    from bloomfilter_spark.functions.hashing import DEFAULT_SEED
+    from bloomfilter_spark.operators.build import bloom_factory
+    from bloomfilter_spark.operators.partitioned import (
+        _KEY_COL,
+        _SHARD_COL,
+        _with_shard,
+        bloom_build_sharded,
+        bloom_build_sharded_grouped,
+    )
+    from bloomfilter_spark.sketches import serde
+    from bloomfilter_spark.sketches.bloom import BloomFilter
+
+    df = spark.range(3_000).select(
+        (F.col("id") % 3).alias("g"),
+        F.when(F.col("id") % 7 == 0, F.lit(None))
+        .otherwise(F.col("id") * 1_000_003)
+        .cast("long")
+        .alias("k"),
+    ).repartition(3)
+    n_shards = 4
+    routed = (
+        _with_shard(df, "k", n_shards)
+        .select("g", F.col(_SHARD_COL).alias("shard"), F.col(_KEY_COL).alias("key"))
+        .toPandas()
+    )
+    assert routed.key.isna().any()
+
+    def local(make, keys):
+        sk = make(len(keys))
+        if len(keys):
+            sk.update(keys)
+        return sk.to_bytes()
+
+    flat = bloom_build_sharded(df, "k", n_expected=40_000, n_shards=n_shards)
+    make_flat = bloom_factory(40_000 // n_shards, 0.01)
+    got = flat.toPandas().set_index("shard")
+    assert sorted(got.index) == sorted(routed.shard.unique())
+    for shard, grp in routed.groupby("shard"):
+        keys = list(grp.key.dropna())
+        assert int(got.loc[shard, "n_keys"]) == len(keys)
+        assert int(got.loc[shard, "n_shards"]) == n_shards
+        assert bytes(got.loc[shard, "blob"]) == local(lambda n: make_flat(), keys)
+
+    grouped = bloom_build_sharded_grouped(df, "g", "k", n_shards=n_shards)
+    got = grouped.toPandas().set_index(["group", "shard"])
+    assert len(got) == routed.groupby(["g", "shard"]).ngroups
+    for (g, shard), grp in routed.groupby(["g", "shard"]):
+        keys = list(grp.key.dropna())
+        row = got.loc[(g, shard)]
+        assert int(row["n_keys"]) == len(keys)
+        want = local(
+            lambda n: BloomFilter.create(max(1024, n), 0.01, seed=DEFAULT_SEED),
+            keys,
+        )
+        assert bytes(row["blob"]) == want, (g, shard)
+        assert serde.deserialize(bytes(row["blob"])).contains(keys).all()

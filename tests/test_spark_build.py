@@ -633,14 +633,17 @@ def test_rollup_sliding_trailing_windows(spark):
         assert (got.registers == want.registers).all(), d
 
 
-def test_driver_merge_holds_two_unpacked_blooms(monkeypatch):
-    """The n-ary merge of a bucket unpacks, merges and drops one Bloom
-    partial at a time: at most the accumulator and one partial are alive
-    (a bucket of 64 partials of a 1.2 GB filter would otherwise need 77 GB).
+def test_driver_merge_holds_two_unpacked_blooms():
+    """The merge of a bucket unpacks, merges and drops one Bloom partial at
+    a time: at most the accumulator and one partial are alive (a bucket of
+    64 partials of a 1.2 GB filter would otherwise need 77 GB).
     Driver-side only, no Spark."""
     import weakref
 
+    import pyarrow as pa
+
     from bloomfilter_spark.operators import pipeline
+    from bloomfilter_spark.operators.build import _merge_sorted
 
     factory = bloom_factory(100_000, 0.01)
     rng = np.random.default_rng(3)
@@ -656,18 +659,21 @@ def test_driver_merge_holds_two_unpacked_blooms(monkeypatch):
     peak = 0
 
     def tracked(make):
-        def make_tracked(*args):
+        def make_tracked(*args, **kwargs):
             nonlocal peak
-            sk = make(*args)
+            sk = make(*args, **kwargs)
             refs.append(weakref.ref(sk.words))
             peak = max(peak, sum(r() is not None for r in refs))
             return sk
 
         return make_tracked
 
-    monkeypatch.setattr(pipeline, "_unpack", tracked(pipeline._unpack))
-    pdf = pd.DataFrame(rows[::-1], columns=["partition_id", "bloom"])
-    merged = pipeline._nary_merge_pdf(pdf, ["bloom"], {"bloom": tracked(factory)})
+    pids, blobs = zip(*rows[::-1])
+    tbl = pa.table({"partition_id": list(pids), "bloom": pa.array(blobs, pa.binary())})
+    merged = _merge_sorted(
+        tbl, ["partition_id"], {"bloom": tracked(factory)},
+        tracked(pipeline._unpack),
+    )
     assert len(refs) == 65
     assert peak <= 2
     assert merged["bloom"].to_bytes() == expect.to_bytes()
@@ -749,6 +755,11 @@ def test_corrupt_packed_partial_names_it(packed_partials, damage, name):
     from bloomfilter_spark.operators import pipeline
 
     factory = pipeline.pages_suite_specs(_PARTIAL_ROWS)[name][1]
+    import pyarrow as pa
+
+    from bloomfilter_spark.operators.build import _merge_sorted
+
     bad = damage(pipeline._pack(packed_partials[name]))
+    tbl = pa.table({"partition_id": [0], name: pa.array([bad], pa.binary())})
     with pytest.raises(ValueError, match=f"packed partial '{name}'.*truncated or corrupt"):
-        pipeline._merge_records([{name: bad}], [name], {name: factory})
+        _merge_sorted(tbl, ["partition_id"], {name: factory}, pipeline._unpack)
