@@ -11,214 +11,182 @@ function over a serialized-sketch column, so a rollup table written by
     SELECT *  FROM urls u WHERE bf_contains((SELECT blob FROM corpus), u.url)
     SELECT week, hll_estimate(sketch_merge(blob)) FROM daily_hll GROUP BY week
 
-without leaving SQL.
+without leaving SQL.  Every function is an Arrow UDF.
 
-What is deliberately NOT here: the raw-key BUILD path.  A pandas
-GROUPED_AGG UDF does no map-side partial aggregation — every raw key would
-shuffle to its group's single reducer — so building sketches from raw
-columns stays with the build engine (`operators/pipeline.py`: mapInArrow
-partials + a canonical-order merge tree).  `sketch_merge` below is safe
-because its inputs are PRE-REDUCED blobs: group sizes are the number
-of sketches per rollup bucket (days per week, partitions per table), which
-is bounded by construction, and every sketch's merge is associative and
-commutative, so reducer order cannot change the result bits.
+What is deliberately NOT here: the raw-key BUILD path.  A grouped-agg UDF
+does no map-side partial aggregation — every raw key would shuffle to its
+group's single reducer — so building sketches from raw columns stays with
+the build engine (`operators/pipeline.py`: mapInArrow partials + a
+canonical-order merge tree).  `sketch_merge` below is safe because its
+inputs are PRE-REDUCED blobs: group sizes are the number of sketches per
+rollup bucket (days per week, partitions per table), which is bounded by
+construction.  It merges through the library's one merge rule
+(`build._merge_sorted`) with the blobs in content order, so the reducer's
+arrival order — which varies with the partition layout — cannot change
+the output bits, compaction sketches (KLL / t-digest / frequent items)
+included.
 
-Per-batch blob memoization: probe tables repeat the same blob across many
+Per-batch blob deduplication: probe tables repeat the same blob across many
 rows (a constant subquery column, or one blob per low-cardinality group),
-so each UDF deserializes once per DISTINCT blob per Arrow batch via a
-bounded per-executor cache, not once per row.
+so each function dictionary-encodes the batch's blob column and
+deserializes once per DISTINCT blob per Arrow batch, not once per row.
+Nothing is cached across batches: hashing a blob to look it up costs more
+than deserializing it.  For GB-scale filters probed at billions of rows,
+prefer the DataFrame API (`operators/membership.py` broadcasts the sketch
+once and caches it per worker).
 
-Null semantics (SQL convention, matching the library-wide null policy):
-any NULL argument row yields NULL, never an error.
+Null semantics (SQL convention, the library-wide probe rule
+`membership._answer_non_null`): any NULL argument row yields NULL, never an
+error.
 """
 
 from __future__ import annotations
 
-import hashlib
-from collections import OrderedDict
-from typing import Callable, Iterator
+from typing import Callable
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
 
+from bloomfilter_spark.operators.build import _merge_sorted
+from bloomfilter_spark.operators.membership import _answer_non_null
 from bloomfilter_spark.sketches import serde
 
-# Byte-bounded per-executor deserialization cache, LRU-evicted.  Keys are
-# 16-byte blake2b digests so the cache never pins the blob BYTES, only the
-# deserialized sketch (whose resident size ≈ the serialized payload — the
-# packed word/counter array dominates both).  Count-bounding instead would
-# let a handful of GB-scale blocked-Bloom blobs pin unbounded memory.
-_CACHE_MAX_BYTES = 256 << 20
-_cache: "OrderedDict[bytes, tuple[object, int]]" = OrderedDict()
-_cache_bytes = 0
 
-
-def _sketch_for(blob) -> object:
-    global _cache_bytes
-    # hash without copying: a cache HIT costs one digest pass over the
-    # blob (memoryview — no bytes() materialization); the copy for
-    # deserialization is paid only on a miss.  The digest stays FULL-blob:
-    # a truncated fingerprint could alias two different blobs and silently
-    # answer probes from the wrong sketch.  For GB-scale filters probed at
-    # billions of rows, prefer the DataFrame API (operators/membership.py
-    # broadcasts the sketch once) over shipping the blob through SQL rows.
-    mv = blob if isinstance(blob, (bytes, bytearray, memoryview)) else bytes(blob)
-    key = hashlib.blake2b(mv, digest_size=16).digest()
-    hit = _cache.get(key)
-    if hit is not None:
-        _cache.move_to_end(key)
-        return hit[0]
-    b = mv if isinstance(mv, bytes) else bytes(mv)
-    sk = serde.deserialize(b)
-    size = len(b)
-    if size > _CACHE_MAX_BYTES:  # a single over-budget giant: use uncached
-        return sk
-    while _cache and _cache_bytes + size > _CACHE_MAX_BYTES:
-        _, (_, old_size) = _cache.popitem(last=False)
-        _cache_bytes -= old_size
-    _cache[key] = (sk, size)
-    _cache_bytes += size
-    return sk
-
-
-def _per_blob_batches(
-    blobs: pd.Series, args: pd.Series, fn: Callable
-) -> pd.Series:
-    """Evaluate fn(sketch, arg_values) once per DISTINCT blob in the batch,
-    vectorized over that blob's rows; NULL blob or NULL arg rows yield NULL."""
-    out = pd.Series(np.full(len(blobs), None, dtype=object), index=blobs.index)
-    valid = blobs.notna() & args.notna()
-    if not valid.any():
-        return out
-    vb, va = blobs[valid], args[valid]
-    codes, uniques = pd.factorize(vb.map(bytes))
-    for i, blob in enumerate(uniques):
-        sel = codes == i
-        res = fn(_sketch_for(blob), va.values[sel])
-        out.loc[va.index[sel]] = list(np.asarray(res))
+def _each_blob(fn: Callable, blobs: pa.Array, args: pa.Array) -> np.ndarray:
+    """fn(sketch, arg_values) once per DISTINCT blob, vectorized over that
+    blob's rows; answers come back in row order.  No NULLs in either."""
+    enc = blobs.dictionary_encode()
+    idx = enc.indices.to_numpy()
+    order = np.argsort(idx, kind="stable")
+    ends = np.cumsum(np.bincount(idx))
+    res = np.concatenate(
+        [
+            np.asarray(fn(serde.deserialize(blob.as_buffer()), args.take(rows)))
+            for blob, rows in zip(enc.dictionary, np.split(order, ends[:-1]))
+        ]
+    )
+    out = np.empty_like(res)
+    out[order] = res
     return out
 
 
-def _per_blob_scalar(blobs: pd.Series, fn: Callable) -> pd.Series:
+def _per_blob_batches(blobs: pa.Array, args: pa.Array, fn: Callable) -> pa.Array:
+    """Evaluate fn(sketch, arg_values) once per DISTINCT blob in the batch,
+    vectorized over that blob's rows; NULL blob or NULL arg rows yield NULL."""
+    return _answer_non_null(lambda b, a: _each_blob(fn, b, a), blobs, args)
+
+
+def _per_blob_scalar(blobs: pa.Array, fn: Callable) -> pa.Array:
     """fn(sketch) once per DISTINCT blob in the batch (estimators like
     estimated_fpp scan the whole filter — O(m); running them per ROW against
     a repeated constant blob would rescan the filter N times); NULL blob →
     NULL."""
-    out = pd.Series(np.full(len(blobs), None, dtype=object), index=blobs.index)
-    valid = blobs.notna()
-    if not valid.any():
-        return out
-    vb = blobs[valid]
-    codes, uniques = pd.factorize(vb.map(bytes))
-    per_blob = [fn(_sketch_for(b)) for b in uniques]
-    out.loc[vb.index] = [per_blob[c] for c in codes]
-    return out
+
+    def each(b: pa.Array) -> pa.Array:
+        enc = b.dictionary_encode()
+        per_blob = [fn(serde.deserialize(x.as_buffer())) for x in enc.dictionary]
+        return pa.array(per_blob).take(enc.indices)
+
+    return _answer_non_null(each, blobs)
 
 
 # -- scalar probe / estimate UDFs ---------------------------------------------
 
 
-@F.pandas_udf(T.BooleanType())
-def bf_contains(blobs: pd.Series, keys: pd.Series) -> pd.Series:
+@F.arrow_udf(T.BooleanType())
+def bf_contains(blobs: pa.Array, keys: pa.Array) -> pa.Array:
     """Membership probe against a Bloom / blocked-Bloom / counting-Bloom
     blob.  True = probably present, False = definitely absent (zero false
     negatives — the reference Contains contract)."""
-    return _per_blob_batches(
-        blobs, keys, lambda sk, vals: [bool(x) for x in sk.contains(vals)]
-    )
+    return _per_blob_batches(blobs, keys, lambda sk, vals: sk.contains(vals))
 
 
-@F.pandas_udf(T.DoubleType())
-def bf_estimated_fpp(blobs: pd.Series) -> pd.Series:
+@F.arrow_udf(T.DoubleType())
+def bf_estimated_fpp(blobs: pa.Array) -> pa.Array:
     """(bitsSet/m)^k of a (counting-)Bloom blob — the reference's
     EstimateFalsePositiveRate (bloomfilter.go:257-261)."""
     return _per_blob_scalar(blobs, lambda sk: float(sk.estimated_fpp()))
 
 
-@F.pandas_udf(T.DoubleType())
-def bf_cardinality(blobs: pd.Series) -> pd.Series:
+@F.arrow_udf(T.DoubleType())
+def bf_cardinality(blobs: pa.Array) -> pa.Array:
     """Bitset cardinality estimate -m/k·ln(1-X/m) of a Bloom-family blob."""
     return _per_blob_scalar(blobs, lambda sk: float(sk.estimated_cardinality()))
 
 
-@F.pandas_udf(T.LongType())
-def sketch_n_added(blobs: pd.Series) -> pd.Series:
+@F.arrow_udf(T.LongType())
+def sketch_n_added(blobs: pa.Array) -> pa.Array:
     """Rows folded into the blob (NULL keys were skipped at build time)."""
     return _per_blob_scalar(blobs, lambda sk: int(sk.n_added))
 
 
-@F.pandas_udf(T.StringType())
-def sketch_kind(blobs: pd.Series) -> pd.Series:
+@F.arrow_udf(T.StringType())
+def sketch_kind(blobs: pa.Array) -> pa.Array:
     """Sketch class name carried by the blob's kind tag (debugging /
     catalog-inspection aid)."""
     return _per_blob_scalar(blobs, lambda sk: type(sk).__name__)
 
 
-@F.pandas_udf(T.DoubleType())
-def hll_estimate(blobs: pd.Series) -> pd.Series:
+@F.arrow_udf(T.DoubleType())
+def hll_estimate(blobs: pa.Array) -> pa.Array:
     """Distinct-count estimate of an HLL or Theta/KMV blob."""
     return _per_blob_scalar(blobs, lambda sk: float(sk.estimate()))
 
 
-@F.pandas_udf(T.LongType())
-def cms_estimate(blobs: pd.Series, keys: pd.Series) -> pd.Series:
+@F.arrow_udf(T.LongType())
+def cms_estimate(blobs: pa.Array, keys: pa.Array) -> pa.Array:
     """Count-min point query: overestimate-only count of key in the blob."""
-    return _per_blob_batches(
-        blobs, keys, lambda sk, vals: [int(x) for x in sk.query(vals)]
-    )
+    return _per_blob_batches(blobs, keys, lambda sk, vals: sk.query(vals))
 
 
-@F.pandas_udf(T.DoubleType())
-def sketch_quantile(blobs: pd.Series, qs: pd.Series) -> pd.Series:
+@F.arrow_udf(T.DoubleType())
+def sketch_quantile(blobs: pa.Array, qs: pa.Array) -> pa.Array:
     """Quantile query against a KLL / t-digest / DDSketch blob."""
     return _per_blob_batches(
         blobs, qs, lambda sk, vals: np.asarray(sk.quantile(vals), dtype=float)
     )
 
 
-@F.pandas_udf(T.DoubleType())
-def sketch_rank(blobs: pd.Series, xs: pd.Series) -> pd.Series:
+@F.arrow_udf(T.DoubleType())
+def sketch_rank(blobs: pa.Array, xs: pa.Array) -> pa.Array:
     """Rank (CDF) query against a KLL / t-digest / DDSketch blob."""
     return _per_blob_batches(
         blobs, xs, lambda sk, vals: np.asarray(sk.rank(vals), dtype=float)
     )
 
 
-@F.pandas_udf(T.LongType())
-def mg_estimate(blobs: pd.Series, keys: pd.Series) -> pd.Series:
+@F.arrow_udf(T.LongType())
+def mg_estimate(blobs: pa.Array, keys: pa.Array) -> pa.Array:
     """Misra-Gries lower-bound count of key (0 if not tracked)."""
-    return _per_blob_batches(
-        blobs, keys, lambda sk, vals: [int(sk.estimate(v)) for v in vals]
-    )
+    return _per_blob_batches(blobs, keys, lambda sk, vals: sk.estimate_arrow(vals))
 
 
 # -- grouped-agg merge ---------------------------------------------------------
 
 
-@F.pandas_udf(T.BinaryType())
-def sketch_merge(blobs: pd.Series) -> bytes:
+@F.arrow_udf(T.BinaryType())
+def sketch_merge(blobs: pa.Array) -> bytes | None:
     """Grouped-agg merge of pre-reduced sketch blobs (`GROUP BY` in SQL).
 
-    Merge is associative AND commutative for every registered sketch
-    (bitwise OR / register-max / counter-sum / compactor merge), so the
-    reducer's arrival order cannot change the output bits.  Mixed kinds or
-    mismatched geometry in one group raise, same as the library merge.
-    NULL blobs are skipped; an all-NULL group yields NULL.
+    The group's blobs merge through `build._merge_sorted` in content order,
+    so the output bits are a pure function of the group's blob multiset,
+    whatever order the reducer receives them in.  Mixed kinds or mismatched
+    geometry in one group raise, same as the library merge.  NULL blobs are
+    skipped; an all-NULL group yields NULL.
 
     Scale note: inputs must be PRE-REDUCED sketches (one blob per day /
     partition / host) — grouped-agg UDFs do no map-side combine, so raw-key
     builds belong to operators/build.py, which partial-aggregates before
     the shuffle.
     """
-    acc = None
-    for b in blobs:
-        if b is None:
-            continue
-        sk = serde.deserialize(bytes(b))
-        acc = sk if acc is None else acc.merge(sk)
-    return None if acc is None else acc.to_bytes()
+    blobs = blobs.drop_null()
+    if not len(blobs):
+        return None
+    first = serde.deserialize(blobs[0].as_buffer())
+    tbl = pa.table({"blob": blobs})
+    return _merge_sorted(tbl, ["blob"], {"blob": first.empty_like})["blob"].to_bytes()
 
 
 _FUNCTIONS: dict[str, object] = {

@@ -26,7 +26,6 @@ from __future__ import annotations
 from functools import partial
 from typing import Callable
 
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 
@@ -394,12 +393,15 @@ def rollup_sliding(
 
 def grouped_estimates(grouped_blobs: DataFrame, finalize: str = "estimate") -> DataFrame:
     """Map per-key blobs to per-key scalar estimates:
-    finalize ∈ {estimate (HLL), popcount/estimated_fpp (Bloom), ...}."""
+    finalize ∈ {estimate (HLL), popcount/estimated_fpp (Bloom), ...}.
+    A NULL blob estimates NULL."""
     from pyspark.sql import functions as F, types as T
 
-    @F.pandas_udf(T.DoubleType())
-    def _finalize(blobs: pd.Series) -> pd.Series:
-        return blobs.map(lambda b: float(getattr(serde.deserialize(b), finalize)()))
+    from bloomfilter_spark.functions.sqlapi import _per_blob_scalar
+
+    @F.arrow_udf(T.DoubleType())
+    def _finalize(blobs: pa.Array) -> pa.Array:
+        return _per_blob_scalar(blobs, lambda sk: float(getattr(sk, finalize)()))
 
     return grouped_blobs.withColumn(finalize, _finalize("blob"))
 

@@ -1,16 +1,22 @@
 """Distributed membership queries — the reference's Contains* family
 (/root/reference/bloomfilter.go:133-180) as a broadcast sketch + vectorized
-pandas UDF.
+Arrow UDF.
 
 This is the sketch analog of a broadcast semi-join: build on one side,
 `might_contain` on the other — the same pattern Catalyst's own runtime
 bloom-filter join rewrite uses. False positives are possible (prune with an
 exact join afterwards when exactness is needed); false negatives are not.
+
+`_answer_non_null` is the library's one NULL rule for every sketch probe
+(these UDFs, the sharded probe, the SQL functions, `grouped_estimates`).
 """
 
 from __future__ import annotations
 
-import pandas as pd
+from functools import reduce
+
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 
@@ -34,28 +40,33 @@ def _cached_sketch(blob: bytes):
     return entry[1]
 
 
+def _answer_non_null(fn, *cols: pa.Array, fill=None) -> pa.Array:
+    """The library's one NULL rule for sketch probes: `fn(*cols)` answers
+    only the rows where every column is non-null, and every other row gets
+    `fill` (None = SQL NULL).  A NULL key was never inserted (builds skip
+    it), so a membership probe answers False and a count answers 0; a NULL
+    blob holds no sketch.  Probing only the non-null rows also keeps an int
+    batch with nulls on the integer hash path."""
+    if not any(c.null_count for c in cols):
+        return pa.array(fn(*cols))
+    valid = reduce(pc.and_, [c.is_valid() for c in cols])
+    out = pa.repeat(pa.scalar(fill), len(valid))
+    if not valid.true_count:
+        return out
+    answers = pa.array(fn(*(c.filter(valid) for c in cols)))
+    return pc.replace_with_mask(out.cast(answers.type), valid, answers)
+
+
 def might_contain_udf(spark, sketch) -> "callable":
     """Returns a Column-producing function: f(col) -> BooleanType Column.
 
     The sketch is broadcast once; each python worker deserializes once and
-    answers whole Arrow batches vectorized."""
+    answers whole Arrow batches vectorized.  A NULL key answers False."""
     bc = spark.sparkContext.broadcast(sketch.to_bytes())
 
-    @F.pandas_udf(T.BooleanType())
-    def _might_contain(s: pd.Series) -> pd.Series:
-        sk = _cached_sketch(bc.value)
-        mask = s.isna()
-        if not mask.any():
-            return pd.Series(sk.contains(s))
-        # NULL keys were never inserted (library-wide null policy) →
-        # might_contain = False; probing only the non-null slice also
-        # keeps an int batch with nulls on the integral-float fast path
-        # instead of crashing hash_any on the NaN rows
-        out = pd.Series(False, index=s.index, dtype=bool)
-        nn = s[~mask]
-        if len(nn):
-            out[~mask] = sk.contains(nn)
-        return out
+    @F.arrow_udf(T.BooleanType())
+    def _might_contain(keys: pa.Array) -> pa.Array:
+        return _answer_non_null(_cached_sketch(bc.value).contains, keys, fill=False)
 
     return _might_contain
 
@@ -206,12 +217,12 @@ def bloom_anti_join(
 
 
 def query_counts_udf(spark, cms) -> "callable":
-    """Count-min point-query as a vectorized UDF: f(col) -> LongType Column."""
+    """Count-min point-query as a vectorized UDF: f(col) -> LongType Column.
+    A NULL key was never inserted, so it counts 0."""
     bc = spark.sparkContext.broadcast(cms.to_bytes())
 
-    @F.pandas_udf(T.LongType())
-    def _query(s: pd.Series) -> pd.Series:
-        sk = _cached_sketch(bc.value)
-        return pd.Series(sk.query(s))
+    @F.arrow_udf(T.LongType())
+    def _query(keys: pa.Array) -> pa.Array:
+        return _answer_non_null(_cached_sketch(bc.value).query, keys, fill=0)
 
     return _query

@@ -12,7 +12,7 @@ The Spark-native answer is sharding by key hash:
   (shard, blob) lives as a DataFrame — persist it as parquet and it
   doubles as the filter's durable serialized form.
 - probe: probes route by the same hash, then a **cogrouped**
-  applyInPandas pairs each shard's probe rows with that shard's single
+  applyInArrow pairs each shard's probe rows with that shard's single
   blob row — the blob crosses the wire once per shard, never per row.
 
 Both sides shuffle only by the 8-byte hash key; no blob is ever broadcast
@@ -24,11 +24,11 @@ from __future__ import annotations
 
 from typing import Callable
 
-import pandas as pd
 import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F
 
+from bloomfilter_spark.operators.membership import _answer_non_null
 from bloomfilter_spark.sketches import serde
 from bloomfilter_spark.sketches.bloom import BloomFilter
 
@@ -131,38 +131,32 @@ def _make_check(col: str, n_shards: int):
     Routing with the wrong modulus silently produces false negatives, so a
     blob row whose recorded n_shards disagrees is a hard error."""
 
-    def check(probe_pdf: pd.DataFrame, blob_pdf: pd.DataFrame) -> pd.DataFrame:
-        keys = probe_pdf[_KEY_COL]
-        probe_pdf = probe_pdf.drop(columns=[_SHARD_COL, _KEY_COL])
-        if len(probe_pdf) == 0:
-            probe_pdf["might_contain"] = pd.Series([], dtype=bool)
-            return probe_pdf
-        if len(blob_pdf) == 0:
-            # no keys were inserted into this shard → definitely absent
-            probe_pdf["might_contain"] = False
-            return probe_pdf
-        if len(blob_pdf) > 1:
+    def check(probe: pa.Table, blobs: pa.Table) -> pa.Table:
+        keys = probe.column(_KEY_COL).combine_chunks()
+        probe = probe.drop_columns([_SHARD_COL, _KEY_COL])
+        if probe.num_rows == 0 or blobs.num_rows == 0:
+            # no keys were inserted into a blob-less shard → definitely absent
+            hit = pa.repeat(pa.scalar(False), probe.num_rows)
+            return probe.append_column("might_contain", hit)
+        if blobs.num_rows > 1:
             # e.g. two build outputs unioned: probing only one blob would
             # silently return false negatives — same hard-error rationale
             # as the modulus check below (merge the filters first)
             raise ValueError(
-                f"shard {int(blob_pdf[_SHARD_COL].iloc[0])} has "
-                f"{len(blob_pdf)} blob rows; a probe answers against ONE "
+                f"shard {blobs.column(_SHARD_COL)[0].as_py()} has "
+                f"{blobs.num_rows} blob rows; a probe answers against ONE "
                 "filter per shard — union the builds via BloomFilter.union "
                 "before probing"
             )
-        built_with = int(blob_pdf["n_shards"].iloc[0])
+        built_with = blobs.column("n_shards")[0].as_py()
         if built_with != n_shards:
             raise ValueError(
                 f"shard table was built with n_shards={built_with}, "
                 f"got n_shards={n_shards}: probes would route to wrong shards"
             )
-        sk = serde.deserialize(blob_pdf["blob"].iloc[0])
-        null_mask = keys.isna().to_numpy()
-        res = sk.contains(keys.fillna(""))
-        res[null_mask] = False  # NULL carries no identity: never inserted
-        probe_pdf["might_contain"] = res
-        return probe_pdf
+        sk = serde.deserialize(blobs.column("blob")[0].as_buffer())
+        hit = _answer_non_null(sk.contains, keys, fill=False)
+        return probe.append_column("might_contain", hit)
 
     return check
 
@@ -180,7 +174,7 @@ def sharded_might_contain(
     shards: DataFrame,
     n_shards: int | None = None,
 ) -> DataFrame:
-    """probe_df + boolean `might_contain`, via cogrouped applyInPandas.
+    """probe_df + boolean `might_contain`, via cogrouped applyInArrow.
 
     Each task sees (probes of shard s, the single blob row of shard s):
     the filter bytes move once per shard, the probes shuffle once by hash.
@@ -193,7 +187,7 @@ def sharded_might_contain(
         .cogroup(
             shards.withColumnRenamed("shard", _SHARD_COL).groupby(_SHARD_COL)
         )
-        .applyInPandas(_make_check(col, n_shards), schema=_probe_schema(probe_df))
+        .applyInArrow(_make_check(col, n_shards), schema=_probe_schema(probe_df))
     )
 
 
@@ -240,7 +234,7 @@ def sharded_grouped_might_contain(
 ) -> DataFrame:
     """probe_df + boolean `might_contain`, routed by (group, key-hash).
 
-    Cogrouped applyInPandas on the composite (group, shard) key: each task
+    Cogrouped applyInArrow on the composite (group, shard) key: each task
     pairs one tenant-shard's probes with that tenant-shard's single blob
     row.  A probe for a tenant with no filter (or an empty shard) is
     definitely absent."""
@@ -253,5 +247,5 @@ def sharded_grouped_might_contain(
             .withColumnRenamed("group", group_col)
             .groupby(group_col, _SHARD_COL)
         )
-        .applyInPandas(_make_check(col, n_shards), schema=_probe_schema(probe_df))
+        .applyInArrow(_make_check(col, n_shards), schema=_probe_schema(probe_df))
     )

@@ -159,7 +159,7 @@ def q_bloom_sharded_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same membership invariants as q_bloom_membership but through the
     SHARDED filter (operators/partitioned.py) — the 10¹²-key path where the
     filter cannot be broadcast: probes route by hash(key) % shards and meet
-    their shard's blob in a cogrouped applyInPandas."""
+    their shard's blob in a cogrouped applyInArrow."""
     from bloomfilter_spark.operators.partitioned import (
         bloom_build_sharded,
         sharded_might_contain,
@@ -300,7 +300,7 @@ FROM documents
 
 
 def q_hll_users_by_day(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Grouped HLL (applyInPandas per key): distinct users per day."""
+    """Grouped HLL (applyInArrow per key): distinct users per day."""
     # NULL-ts events form an explicit "(none)" day: a plain inner join on
     # the day key would silently DROP the null group (NULL != NULL), while
     # the SQL GROUP BY keeps it
@@ -1041,7 +1041,7 @@ def q_topk_users_freqitems(spark: SparkSession, sf_dir: str) -> DataFrame:
     its candidate set; MG surfaces the hitters itself from one scan and
     8·capacity-ish bytes of state).
 
-    Plan: per-partition MG partials (mapInPandas, per-unique-key folds) →
+    Plan: per-partition MG partials (mapInArrow, value_counts folds) →
     canonical bounded-fan-in merge tree (merge_all = sum-then-prune-once) →
     driver-side topk() on the single merged summary.  Capacity 4096 ≥
     distinct users at every test SF, so no prune ever fires, every stored

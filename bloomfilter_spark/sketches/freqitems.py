@@ -247,6 +247,23 @@ class FrequentItemsSketch:
             key = str(key)
         return int(self._counts.get(key, 0))
 
+    def estimate_arrow(self, keys) -> np.ndarray:
+        """`estimate` over a null-free Arrow key array: keys are cast to the
+        sketch's key type, probed against the stored keys with one index_in
+        and gathered from the stored counts (0 where untracked)."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        if not self._counts:
+            return np.zeros(len(keys), dtype=np.int64)
+        key_type = pa.int64() if self.key_type == KEY_INT else pa.string()
+        stored = pa.array(list(self._counts), type=key_type)
+        counts = np.append(
+            np.fromiter(self._counts.values(), dtype=np.int64, count=len(stored)), 0
+        )
+        pos = pc.index_in(keys.cast(key_type), value_set=stored)
+        return counts[pos.fill_null(len(stored)).to_numpy()]
+
     def error_bound(self) -> int:
         """Max per-key deduction after any build/merge history:
         (N − m̂)/(capacity+1), N = total weight, m̂ = Σ stored counts."""

@@ -143,19 +143,15 @@ def streaming_first_seen(
         else:
             sk = new_filter()
         for pdf in pdfs:
+            # NULL keys all route to shard -1, so every key here is non-null
             keys = pdf["__key_str"]
-            pdf = pdf.drop(columns=["__shard", "__key_str"])
-            null_mask = keys.isna().to_numpy()
-            novel = ~sk.contains(keys.fillna(""))
+            novel = ~sk.contains(keys)
             # first-in-batch wins among same-batch duplicates
             novel &= ~keys.duplicated().to_numpy()
-            keep = (novel & ~null_mask) | null_mask
-            out = pdf[keep]
-            insert = keys[novel & ~null_mask]
-            if len(insert):
-                sk.update(insert)
-            if len(out):
-                yield out
+            first = pdf[novel]
+            _fold_state(sk, [first], "__key_str", pa.string())
+            if len(first):
+                yield first.drop(columns=["__shard", "__key_str"])
         state.update((sk.to_bytes(),))
 
     return sharded.groupBy("__shard").applyInPandasWithState(
@@ -399,7 +395,7 @@ def streaming_first_seen_windowed(
                 else:
                     novel = ~sk.contains(keys)
                 if novel.any():
-                    sk.update(keys[novel])
+                    _fold_state(sk, [keys[novel].to_frame()], "__key_str", pa.string())
                     emit[cand[novel]] = True
             if emit.any():
                 yield pdf[emit].drop(columns=helper)

@@ -1,11 +1,15 @@
 """bloom_anti_join: exactness vs a plain anti-join (FPs killed), the
-counter-filter path, and tiny/saturated sketches."""
+counter-filter path, and tiny/saturated sketches; the broadcast probe
+UDFs' NULL rule."""
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import functions as F
 
-from bloomfilter_spark.operators.membership import bloom_anti_join
+from bloomfilter_spark.operators.membership import bloom_anti_join, query_counts_udf
+from bloomfilter_spark.sketches.cms import CountMinSketch
 
 
 def _ids(df):
@@ -103,3 +107,22 @@ def test_unknown_layout_rejected(spark):
     # any message containing just "blocked"
     with pytest.raises(ValueError, match=re.escape("layout must be flat|blocked")):
         bloom_anti_join(probe, "k", build, "b", layout="cuckoo")
+
+
+def test_query_counts_null_keys_count_zero(spark):
+    """A NULL key was never inserted, so it counts 0 (might_contain's False
+    for counts) — not the count of "" on a string column, and not a hashing
+    error on a long column."""
+    by_str = CountMinSketch.create(0.001, 0.01)
+    by_str.update(pa.array(["", "a", "a"]))
+    df = spark.createDataFrame([("a",), ("",), (None,), ("b",)], "k string")
+    count = query_counts_udf(spark, by_str)
+    got = {r["k"]: r["n"] for r in df.select("k", count("k").alias("n")).collect()}
+    assert got == {"a": 2, "": 1, None: 0, "b": 0}
+
+    by_long = CountMinSketch.create(0.001, 0.01)
+    by_long.update(np.array([7, 7, 9], dtype=np.int64))
+    df = spark.createDataFrame([(7,), (9,), (None,), (11,)], "k long")
+    count = query_counts_udf(spark, by_long)
+    got = {r["k"]: r["n"] for r in df.select("k", count("k").alias("n")).collect()}
+    assert got == {7: 2, 9: 1, None: 0, 11: 0}

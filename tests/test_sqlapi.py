@@ -8,13 +8,17 @@ Contracts pinned here:
   * sketch_merge(GROUP BY) produces a blob whose estimate equals the
     in-process merge of the same blobs (merge is order-independent);
   * NULL argument rows yield NULL, never an error;
-  * mixed-kind merge inside one group raises (geometry contract).
+  * mixed-kind merge inside one group raises (geometry contract);
+  * sketch_merge output bits do not depend on the partition layout, for
+    compaction sketches too (blobs merge in content order);
+  * mg_estimate replays FrequentItemsSketch.estimate for int and string keys.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 import pyspark.sql.functions as F
 
@@ -22,9 +26,12 @@ from bloomfilter_spark.functions.sqlapi import register_sql_functions
 from bloomfilter_spark.sketches.bloom import BloomFilter
 from bloomfilter_spark.sketches.blocked import BlockedBloomFilter
 from bloomfilter_spark.sketches.cbf import CountingBloomFilter
+from bloomfilter_spark.operators.build import _merge_sorted
 from bloomfilter_spark.sketches.cms import CountMinSketch
+from bloomfilter_spark.sketches.freqitems import FrequentItemsSketch
 from bloomfilter_spark.sketches.hll import HyperLogLog
 from bloomfilter_spark.sketches.kll import KLLSketch
+from bloomfilter_spark.sketches.tdigest import TDigest
 from bloomfilter_spark.sketches import serde
 
 
@@ -173,6 +180,75 @@ def test_sketch_merge_mixed_kinds_raises(spark):
         ).collect()
 
 
+def test_sketch_merge_layout_independent(spark):
+    """12 compaction-sketch blobs per group merged by SQL GROUP BY under
+    several partition layouts: every layout gives the same bytes, and they
+    equal the library merge (`_merge_sorted`) of the same blobs."""
+    rng = np.random.default_rng(17)
+    makers = {
+        "kll": (lambda: KLLSketch(k=16), lambda: rng.normal(0.0, 1.0, 400)),
+        "tdigest": (lambda: TDigest(delta=20), lambda: rng.exponential(5.0, 400)),
+        "freq": (
+            lambda: FrequentItemsSketch(8),
+            lambda: pa.array(rng.zipf(1.3, 400) % 60, pa.int64()),
+        ),
+    }
+    rows, want = [], {}
+    for kind, (make, draw) in makers.items():
+        blobs = []
+        for _ in range(12):
+            sk = make()
+            if kind == "freq":
+                sk.update_arrow(draw())
+            else:
+                sk.update(draw())
+            blobs.append(sk.to_bytes())
+        rows += [(kind, b) for b in blobs]
+        merged = _merge_sorted(pa.table({"blob": blobs}), ["blob"], {"blob": make})
+        want[kind] = merged["blob"].to_bytes()
+
+    got = []
+    for order, parts in [(rows, 1), (rows[::-1], 4), (rows[5:] + rows[:5], 3)]:
+        df = spark.createDataFrame(order, "kind string, blob binary").repartition(parts)
+        df.createOrReplaceTempView("merge_layout")
+        got.append(
+            {
+                r["kind"]: bytes(r["m"])
+                for r in spark.sql(
+                    "SELECT kind, sketch_merge(blob) AS m "
+                    "FROM merge_layout GROUP BY kind"
+                ).collect()
+            }
+        )
+    for g in got:
+        assert g == want
+
+
+def test_mg_estimate_sql(spark):
+    ints = FrequentItemsSketch(64)
+    ints.update_arrow(pa.array([1] * 5 + [2] * 3 + [7]))
+    strs = FrequentItemsSketch(64)
+    strs.update_arrow(pa.array(["x"] * 4 + ["y"]))
+    bi, bs = ints.to_bytes(), strs.to_bytes()
+    int_rows = spark.createDataFrame(
+        [(bi, 1), (bi, 2), (bi, 7), (bi, 99), (bi, None), (None, 1)],
+        "blob binary, k long",
+    ).selectExpr("blob IS NULL AS nb", "k", "mg_estimate(blob, k) AS est")
+    got = {(r["nb"], r["k"]): r["est"] for r in int_rows.collect()}
+    assert got == {
+        (False, 1): 5, (False, 2): 3, (False, 7): 1, (False, 99): 0,
+        (False, None): None, (True, 1): None,
+    }
+    str_rows = spark.createDataFrame(
+        [(bs, "x"), (bs, "y"), (bs, "untracked"), (bs, None)], "blob binary, k string"
+    ).selectExpr("k", "mg_estimate(blob, k) AS est")
+    got = {r["k"]: r["est"] for r in str_rows.collect()}
+    assert got == {"x": 4, "y": 1, "untracked": 0, None: None}
+    assert [got[k] for k in ("x", "y", "untracked")] == [
+        strs.estimate(k) for k in ("x", "y", "untracked")
+    ]
+
+
 def test_cms_estimate_sql(spark):
     vals = ["x"] * 50 + ["y"] * 7 + ["z"] * 1
     c = CountMinSketch.create(epsilon=0.001, delta=0.01)
@@ -208,21 +284,21 @@ def test_sketch_quantile_and_rank_sql(spark):
 def test_blob_memoization_one_deserialize_per_distinct_blob():
     """The per-batch probe groups rows by distinct blob: one contains()
     call per blob, vectorized over that blob's rows (driver-side check of
-    the grouping helper itself)."""
+    the grouping helper itself, on the Arrow arrays the UDF receives)."""
     from bloomfilter_spark.functions.sqlapi import _per_blob_batches
 
     bf1 = BloomFilter.create(10, 0.01)
     bf1.update(pd.Series(["a"]))
     bf2 = BloomFilter.create(10, 0.01)
     bf2.update(pd.Series(["b"]))
-    blobs = pd.Series([bf1.to_bytes(), bf2.to_bytes(), bf1.to_bytes(), None])
-    keys = pd.Series(["a", "b", "b", "a"])
+    blobs = pa.array([bf1.to_bytes(), bf2.to_bytes(), bf1.to_bytes(), None])
+    keys = pa.array(["a", "b", "b", "a"])
     calls = []
 
     def probe(sk, vals):
         calls.append(len(vals))
-        return [bool(x) for x in sk.contains(vals)]
+        return sk.contains(vals)
 
     out = _per_blob_batches(blobs, keys, probe)
     assert len(calls) == 2 and sorted(calls) == [1, 2]
-    assert out.tolist()[:3] == [True, True, False] and out.tolist()[3] is None
+    assert out.to_pylist()[:3] == [True, True, False] and out.to_pylist()[3] is None
