@@ -20,7 +20,6 @@ mandate (BASELINE.json:15).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
 U64 = np.uint64
 _MASK64 = U64(0xFFFFFFFFFFFFFFFF)
@@ -300,20 +299,34 @@ def murmur3_x64_128_u64(values, seed: int = DEFAULT_SEED) -> tuple[np.ndarray, n
 
 
 # ---------------------------------------------------------------------------
-# Batch input adapters: pandas/Arrow/numpy -> (flat uint8, offsets int64)
+# Batch input: one coercion to Arrow -> (flat uint8, offsets int64)
 # ---------------------------------------------------------------------------
+
+
+def as_arrow(values):
+    """The library's one key coercion: an Arrow Array/ChunkedArray passes
+    through unchanged; anything else (numpy, pandas, list, tuple) becomes
+    one ``pa.array(values)`` — a contiguous numpy int64 array zero-copy.
+    Python ints past int64 (genuine uint64-range keys) retry as uint64."""
+    import pyarrow as pa
+
+    if isinstance(values, (pa.Array, pa.ChunkedArray)):
+        return values
+    try:
+        return pa.array(values)
+    except OverflowError:
+        return pa.array(values, type=pa.uint64())
 
 
 def _bytes_view(values, want_binary: bool) -> tuple[np.ndarray, np.ndarray]:
     """Shared adapter behind bytes_view_of_strings/bytes_view_of_binary.
 
-    Accepts a pandas Series, pyarrow Array/ChunkedArray, numpy object array,
-    or list.  Nulls hash as empty values (callers that need to skip nulls
-    drop them first).  Batches whose flat bytes exceed the int32-offset
-    2 GiB capacity are widened to the large_(string|binary) layout instead
-    of failing with an opaque ArrowCapacityError/AttributeError deep in the
-    hash path — the offsets are normalized to int64 either way, so the
-    murmur kernel sees one shape."""
+    Takes anything `as_arrow` takes.  Nulls hash as empty values (callers
+    that need to skip nulls drop them first).  Batches whose flat bytes
+    exceed the int32-offset 2 GiB capacity are widened to the
+    large_(string|binary) layout instead of failing with an opaque
+    ArrowCapacityError deep in the hash path — the offsets are normalized
+    to int64 either way, so the murmur kernel sees one shape."""
     import pyarrow as pa
 
     pa_type = pa.binary() if want_binary else pa.string()
@@ -324,18 +337,7 @@ def _bytes_view(values, want_binary: bool) -> tuple[np.ndarray, np.ndarray]:
     )
     fill = b"" if want_binary else ""
 
-    if isinstance(values, pd.Series):
-        try:
-            arr = pa.Array.from_pandas(values, type=pa_type)
-        except pa.ArrowCapacityError:
-            arr = pa.Array.from_pandas(values, type=large_type)
-    elif isinstance(values, (pa.Array, pa.ChunkedArray)):
-        arr = values
-    else:
-        try:
-            arr = pa.array(list(values), type=pa_type)
-        except pa.ArrowCapacityError:
-            arr = pa.array(list(values), type=large_type)
+    arr = as_arrow(values)
     if isinstance(arr, pa.ChunkedArray):
         try:
             arr = arr.combine_chunks()
@@ -405,82 +407,28 @@ def md5_hash60(col):
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
-def _integral_keys(arr: np.ndarray) -> np.ndarray:
-    """float batch → int64 keys, refusing anything non-integral: hash
-    keys are ints, strings, or bytes — a true float key is a caller bug,
-    not something to hash by bit pattern silently."""
-    arr = np.asarray(arr, dtype=np.float64)
-    if not (np.isfinite(arr).all() and (arr == np.rint(arr)).all()):
-        raise TypeError(
-            "hash_any: non-integral float batch — drop NaN/None rows and "
-            "pass int, string, or bytes keys"
-        )
-    # same acceptance bound as FrequentItemsSketch: above 2^53 float64
-    # cannot represent every integer, so distinct keys would silently
-    # collapse to one hash — refuse instead
-    if arr.size and np.abs(arr).max() >= 2.0**53:
-        raise TypeError(
-            "hash_any: integer keys above 2^53 arrived as float64 (lossy) "
-            "— cast the column to long upstream"
-        )
-    return arr.astype(np.int64)
-
-
 def hash_any(values, seed: int = DEFAULT_SEED) -> tuple[np.ndarray, np.ndarray]:
-    """Dispatch on batch dtype and return (h1, h2) — the reference's
-    byte-collapse rule (string→utf8, int→8 bytes, bytes→bytes)."""
+    """(h1, h2) of a key batch: `as_arrow`, then one switch on the Arrow
+    type — the reference's byte-collapse rule (int→8 bytes, string→utf8,
+    bytes→bytes).  NULL strings and bytes hash as empty; every other key
+    type (float, bool, temporal, decimal, nested, dictionary) is refused
+    rather than hashed through a cast."""
     import pyarrow as pa
 
-    if isinstance(values, pd.Series):
-        if pd.api.types.is_integer_dtype(values.dtype):
-            # to_numpy(dtype=...) also flattens pandas nullable-Int64
-            # extension arrays (object-backed) into plain int64
-            return murmur3_x64_128_u64(values.to_numpy(dtype="int64"), seed)
-        if pd.api.types.is_float_dtype(values.dtype):
-            # nullable-int parquet columns surface as float64 after a
-            # dropna; integral floats are integer keys (same acceptance
-            # rule as FrequentItemsSketch), anything else is a caller bug
-            return murmur3_x64_128_u64(_integral_keys(values.to_numpy()), seed)
-        # sniff the first NON-NULL element: a nullable binary column whose
-        # first row happens to be null must still route to the bytes path
-        sample = values.dropna()
-        if len(sample) and isinstance(sample.iloc[0], (bytes, bytearray)):
-            return murmur3_x64_128(*bytes_view_of_binary(values), seed)
-        return murmur3_x64_128(*bytes_view_of_strings(values), seed)
-    if isinstance(values, np.ndarray) and values.dtype.kind in ("i", "u"):
-        return murmur3_x64_128_u64(values, seed)
-    if isinstance(values, np.ndarray) and values.dtype.kind == "f":
-        return murmur3_x64_128_u64(_integral_keys(values), seed)
-    if isinstance(values, (pa.Array, pa.ChunkedArray)):
-        t = values.type
-        if pa.types.is_integer(t):
-            npv = values.to_numpy(zero_copy_only=False)
-            if npv.dtype.kind == "f":
-                # nulls surfaced as NaN — _integral_keys raises the
-                # drop-your-nulls TypeError instead of letting a NaN take
-                # the architecture-dependent float->uint64 cast
-                npv = _integral_keys(npv)
-            return murmur3_x64_128_u64(npv, seed)
-        if pa.types.is_floating(t):
-            # same rule as the pandas branch — never fall through to
-            # hashing a float's string repr
-            return murmur3_x64_128_u64(
-                _integral_keys(values.to_numpy(zero_copy_only=False)), seed
+    arr = as_arrow(values)
+    t = arr.type
+    if pa.types.is_integer(t):
+        if arr.null_count:
+            raise TypeError(
+                f"hash_any: {t} key batch has nulls — drop NaN/None rows "
+                "before hashing"
             )
-        if pa.types.is_binary(t) or pa.types.is_large_binary(t):
-            return murmur3_x64_128(*bytes_view_of_binary(values), seed)
-        return murmur3_x64_128(*bytes_view_of_strings(values), seed)
-    values = list(values)
-    first = next((v for v in values if v is not None), None)
-    if isinstance(first, (int, np.integer)):
-        # int64 first so negative keys wrap two's-complement (identical
-        # bytes to the pandas/numpy branches on every numpy version);
-        # only a genuine uint64-range key falls back to the uint64 dtype
-        try:
-            arr = np.array(values, dtype=np.int64)
-        except OverflowError:
-            arr = np.array(values, dtype=np.uint64)
-        return murmur3_x64_128_u64(arr, seed)
-    if isinstance(first, (bytes, bytearray)):
-        return murmur3_x64_128(*bytes_view_of_binary(values), seed)
-    return murmur3_x64_128(*bytes_view_of_strings(values), seed)
+        return murmur3_x64_128_u64(arr.to_numpy(), seed)
+    if pa.types.is_binary(t) or pa.types.is_large_binary(t):
+        return murmur3_x64_128(*bytes_view_of_binary(arr), seed)
+    if pa.types.is_string(t) or pa.types.is_large_string(t) or pa.types.is_null(t):
+        return murmur3_x64_128(*bytes_view_of_strings(arr), seed)
+    raise TypeError(
+        f"hash_any: unsupported key type {t} — keys are int, string, or "
+        "bytes; cast the column upstream"
+    )

@@ -62,7 +62,9 @@ def _merge_sorted(
     sorted table or a list.  Kinds with merge_all take the whole multiset
     at once (their result is a pure function of it, and their blobs are
     KB-sized); every other kind merges and drops one blob at a time, so a
-    giant Bloom merge holds 2 sketches, not one per row."""
+    giant Bloom merge holds 2 sketches, not one per row.  A blob of
+    another kind than the factory's sketch raises a ValueError naming both
+    kinds, before any kind-specific geometry check reads its fields."""
     idx = pc.sort_indices(
         tbl, sort_keys=[(c, "ascending") for c in order]
     ).to_pylist()
@@ -72,11 +74,23 @@ def _merge_sorted(
         open_ = serde.deserialize if load is None else partial(load, name=name)
         acc = out[name] = make()
         if hasattr(acc, "merge_all"):
-            acc.merge_all([open_(col[i].as_buffer()) for i in idx])
+            acc.merge_all(
+                [_same_kind(acc, open_(col[i].as_buffer()), name) for i in idx]
+            )
         else:
             for i in idx:
-                acc.merge(open_(col[i].as_buffer()))
+                acc.merge(_same_kind(acc, open_(col[i].as_buffer()), name))
     return out
+
+
+def _same_kind(acc, sk, name: str):
+    """`sk` if it is the same sketch class as the accumulator `acc`."""
+    if type(sk) is not type(acc):
+        raise ValueError(
+            f"cannot merge a {type(sk).__name__} blob into a "
+            f"{type(acc).__name__} ({name!r}): mixed sketch kinds"
+        )
+    return sk
 
 
 def build_sketch(df: DataFrame, col: str, factory: Callable[[], object]):

@@ -363,7 +363,7 @@ def minhash_signatures(
             flat, offsets = _shingle_sets(texts, n)
             sigs: list[list[int]] = [[] for _ in range(len(texts))]
             if len(flat):
-                fb, fo = bytes_view_of_strings(pd.Series(flat))
+                fb, fo = bytes_view_of_strings(flat)
                 h, _ = murmur3_x64_128(fb, fo, seed=seed)
                 _minhash_fold(
                     h, offsets, a_p, b_p,
@@ -407,7 +407,7 @@ def minhash_signatures_with_shingles(
             sigs = [[] for _ in range(len(texts))]
             shs = [[] for _ in range(len(texts))]
             if len(flat):
-                fb, fo = bytes_view_of_strings(pd.Series(flat))
+                fb, fo = bytes_view_of_strings(flat)
                 h, _ = murmur3_x64_128(fb, fo, seed=seed)
 
                 def sink(row, m):
@@ -608,7 +608,7 @@ def simhash64(
             flat_tokens = [t for ts in toks for t in ts]
             out = np.zeros(len(pdf), dtype=np.int64)
             if flat_tokens:
-                fb, fo = bytes_view_of_strings(pd.Series(flat_tokens))
+                fb, fo = bytes_view_of_strings(flat_tokens)
                 h, _ = murmur3_x64_128(fb, fo, seed=seed)
                 offsets = np.zeros(len(pdf) + 1, dtype=np.int64)
                 np.cumsum(counts, out=offsets[1:])

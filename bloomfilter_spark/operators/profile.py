@@ -103,7 +103,7 @@ def profile_sketches(
       per_col[col] = {'moments'|'strstats': exact stats sketch,
                       'hll': HLL (absent for float columns — hashing a
                              continuous double as a distinct key is a bug
-                             trap, see functions/hashing._integral_keys),
+                             trap, which functions/hashing.hash_any refuses),
                       'kll': KLL (numeric-representable columns),
                       'freq': Misra-Gries (int/string/bool columns),
                       'sample': deterministic k-min-md5 example values

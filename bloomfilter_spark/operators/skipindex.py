@@ -94,11 +94,10 @@ def bloom_skipping_lookup(
     if not keys:
         raise ValueError("bloom_skipping_lookup needs at least one key")
     side = spark.read.parquet(path + _SIDECAR_SUFFIX).toPandas()
-    probe = pd.Series(keys)
     cands = [
         r[part_col]
         for _, r in side.iterrows()
-        if bool(np.any(serde.deserialize(r["blob"]).contains(probe)))
+        if bool(np.any(serde.deserialize(r["blob"]).contains(keys)))
     ]
     data = spark.read.parquet(path)
     # isin on the partition column compiles to PartitionFilters — only

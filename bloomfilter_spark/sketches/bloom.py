@@ -266,8 +266,8 @@ class BloomFilter:
         self.n_added += len(h1)
 
     def update(self, values) -> None:
-        """Vectorized Add/AddString/AddUint64 over a batch (pandas Series,
-        pyarrow array, numpy array, or list)."""
+        """Vectorized Add/AddString/AddUint64 over a batch of int, string
+        or bytes keys (anything `hashing.as_arrow` takes)."""
         h1, h2 = hash_any(values, self.seed)
         self.add_hashes(h1, h2)
 

@@ -110,7 +110,7 @@ class CountMinSketch:
                 # negative mass breaks the overestimate-only guarantee
                 # (query >= true count) and drives `total` negative, which
                 # only surfaces later as a struct.error packing u64 —
-                # refuse at the input like FrequentItemsSketch does
+                # refuse at the input
                 raise ValueError(
                     f"countmin: negative weight {int(w.min())} — counts "
                     "are add-only (use CountingBloomFilter for deletes)"

@@ -13,7 +13,7 @@ Wei, Yi, "Mergeable Summaries", PODS 2012 §3):
 
   * underestimate-only:  estimate(k) ≤ true_count(k)
   * bounded deduction:   estimate(k) ≥ true_count(k) − (N − m̂)/(capacity+1)
-    where N = total weight ingested and m̂ = Σ stored counts — the bound
+    where N = total keys ingested and m̂ = Σ stored counts — the bound
     SURVIVES ARBITRARY MERGES, which is what makes this a UDAF-able sketch.
   * completeness: every key with true_count > (N − m̂)/(capacity+1) holds a
     counter (no false negatives among ε-heavy hitters, ε = 1/(capacity+1)).
@@ -41,8 +41,8 @@ import struct
 from collections import Counter
 
 import numpy as np
-import pandas as pd
 
+from bloomfilter_spark.functions.hashing import as_arrow
 from bloomfilter_spark.sketches import serde
 
 KEY_UNSET = -1
@@ -61,7 +61,7 @@ class FrequentItemsSketch:
             raise ValueError(f"freqitems: capacity must be >= 1, got {capacity}")
         self.capacity = int(capacity)
         self.key_type = KEY_UNSET
-        self.total = 0  # N: total weight ingested (exact python int)
+        self.total = 0  # N: total keys ingested (exact python int)
         self.n_added = 0
         self._counts: Counter = Counter()
 
@@ -82,76 +82,20 @@ class FrequentItemsSketch:
                 f"freqitems: key type mismatch (have {self.key_type}, got {kt})"
             )
 
-    @staticmethod
-    def _coerce(values: pd.Series) -> tuple[int, pd.Series]:
-        """-> (key_type, canonical key series). Integer dtypes become int64
-        keys; everything else string keys (floats are rejected: binary float
-        keys under frequency counting are almost always a bug)."""
-        if pd.api.types.is_integer_dtype(values):
-            return KEY_INT, values.astype("int64")
-        if pd.api.types.is_float_dtype(values):
-            # a nullable int64 parquet column surfaces in pandas as float64;
-            # accept it iff every (post-dropna) value is integral AND small
-            # enough that the float64 round-trip was lossless — above 2^53
-            # distinct int64 keys collapse silently (e.g. xxhash64-derived
-            # ids), which would break the underestimate-only guarantee
-            f = values.to_numpy(dtype="float64")
-            if np.any(np.abs(f) >= 2.0**53):
-                raise ValueError(
-                    "freqitems: float-surfaced keys >= 2^53 lose precision; "
-                    "cast the column to string (or avoid nulls) upstream"
-                )
-            ints = values.astype("int64")
-            if not np.array_equal(ints.to_numpy(dtype="float64"), f):
-                raise ValueError("freqitems: non-integral float keys are not supported")
-            return KEY_INT, ints
-        return KEY_STR, values.astype(str)
-
-    def update(self, values: pd.Series, weights=None) -> None:
-        """Fold a batch: exact per-batch value_counts merged into the
-        summary, then one prune — per-UNIQUE-key work, never per row.
-        Null keys are dropped (with their weights)."""
-        raw = pd.Series(values)
-        if weights is not None:
-            w_all = np.asarray(weights, dtype="int64")
-            if len(w_all) != len(raw):
-                raise ValueError(
-                    f"freqitems: {len(w_all)} weights for {len(raw)} values"
-                )
-        mask = raw.notna().to_numpy()
-        values = raw[mask]
-        if len(values) == 0:
-            return
-        kt, keys = self._coerce(values)
-        self._resolve_key_type(kt)
-        if weights is None:
-            vc = keys.value_counts()
-            w_total = len(keys)
-        else:
-            w = pd.Series(w_all[mask], index=keys.index)
-            if (w < 0).any():
-                raise ValueError("freqitems: negative weights are not allowed")
-            vc = w.groupby(keys).sum()
-            vc = vc[vc > 0]  # zero-weight keys must not occupy counters
-            w_total = int(w.sum())
-        if self.key_type == KEY_INT:
-            self._counts.update({int(k): int(c) for k, c in vc.items()})
-        else:
-            self._counts.update({str(k): int(c) for k, c in vc.items()})
-        self.total += int(w_total)
-        self.n_added += len(keys)
-        self._prune()
+    def update(self, values) -> None:
+        """Fold a batch of int or string keys (anything `as_arrow` takes);
+        null keys are dropped."""
+        self.update_arrow(as_arrow(values).drop_null())
 
     def update_arrow(self, arr) -> None:
-        """Arrow-native fold for the one-scan suite (mapInArrow): value
-        counts computed by pyarrow's C++ kernel on the raw (null-free)
-        array, merged with the retained summary and PRUNED while still in
-        Arrow — only the ≤ capacity survivors ever materialize as python
-        objects.  (The previous per-batch `to_pylist` of every unique key
-        was the profile scan's bottleneck on near-unique long-string
-        columns: ~38 µs/row under 32-way memory contention, vs ~2 µs/row
-        for this path.)  The result is the same sum-then-prune-once
-        multiset fold as `update`/`merge_all`."""
+        """The one Misra-Gries fold, over a null-free Arrow key array:
+        value counts computed by pyarrow's C++ kernel, merged with the
+        retained summary and PRUNED while still in Arrow — only the
+        ≤ capacity survivors ever materialize as python objects.  (A
+        per-batch `to_pylist` of every unique key was the profile scan's
+        bottleneck on near-unique long-string columns: ~38 µs/row under
+        32-way memory contention, vs ~2 µs/row for this path.)  Prunes with
+        the same sum-then-prune-once rule as `merge_all`."""
         import pyarrow as pa
         import pyarrow.compute as pc
 
@@ -266,7 +210,7 @@ class FrequentItemsSketch:
 
     def error_bound(self) -> int:
         """Max per-key deduction after any build/merge history:
-        (N − m̂)/(capacity+1), N = total weight, m̂ = Σ stored counts."""
+        (N − m̂)/(capacity+1), N = total keys, m̂ = Σ stored counts."""
         kept = sum(self._counts.values())
         return (self.total - kept) // (self.capacity + 1)
 

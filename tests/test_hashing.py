@@ -125,14 +125,54 @@ def test_int64_adapter_little_endian():
 
 
 def test_hash_any_dispatch():
-    import pandas as pd
+    """Every accepted key form hashes exactly as its canonical Arrow array
+    (int → 8 bytes whatever the width, string → utf8, bytes → bytes, NULL
+    string/bytes → empty); every other key type raises TypeError naming
+    it, integral floats included."""
+    import datetime
+    import decimal
 
-    h_str, _ = hash_any(pd.Series(["a", "b"]))
-    h_int, _ = hash_any(pd.Series([1, 2]))
-    h_bytes, _ = hash_any(pd.Series([b"a", b"b"]))
-    assert h_str.dtype == np.uint64 and h_int.dtype == np.uint64
+    import pyarrow as pa
+
+    ints = pa.array([1, -2, 3], pa.int64())
+    strs = pa.array(["a", "ü", ""], pa.string())
+    blobs = pa.array([b"", b"\xff\xfe", b"ok"], pa.binary())
+    accepted = [
+        (ints, ints),
+        (pa.array([1, 2**64 - 1], pa.uint64()), pa.array([1, 2**64 - 1], pa.uint64())),
+        (strs, strs),
+        (pa.array(["a", "ü", ""], pa.large_string()), strs),
+        (blobs, blobs),
+        (pa.array([b"", b"\xff\xfe", b"ok"], pa.large_binary()), blobs),
+        (np.array([1, -2, 3], dtype=np.int32), ints),
+        (np.array([1, -2, 3], dtype=np.int64), ints),
+        ([1, -2, 3], ints),
+        (["a", "ü", ""], strs),
+        ([None, b"\xff\xfe", b"ok"], blobs),
+        (pd.Series(["a", "ü", ""], dtype=object), strs),
+        (pd.Series([1, -2, 3], dtype="int64"), ints),
+        (pd.Series([1, -2, 3], dtype="Int64"), ints),
+    ]
+    for form, canonical in accepted:
+        got, want = hash_any(form), hash_any(canonical)
+        assert got[0].dtype == np.uint64
+        assert np.array_equal(got[0], want[0]) and np.array_equal(got[1], want[1]), form
     # str "a" (utf-8) and bytes b"a" collapse to the same bytes -> same hash
-    assert h_str[0] == h_bytes[0]
+    assert hash_any(["a"])[0][0] == hash_any([b"a"])[0][0]
+
+    refused = [
+        (np.array([1.0, 2.0]), "double"),
+        (pd.Series([1.5, 2.0]), "double"),
+        (pa.array([1.0, 2.0], pa.float64()), "double"),
+        (pa.array([True, False]), "bool"),
+        (pa.array([datetime.date(2020, 1, 1)]), "date32"),
+        (pa.array([datetime.datetime(2020, 1, 1)]), "timestamp"),
+        (pa.array([decimal.Decimal("1.5")]), "decimal"),
+        (pa.array([1, None, 3], pa.int64()), "int64"),
+    ]
+    for form, type_name in refused:
+        with pytest.raises(TypeError, match=type_name):
+            hash_any(form)
 
 
 def test_nulls_hash_as_empty():
@@ -246,3 +286,32 @@ def test_hash_any_binary_series_null_first_routes_to_bytes():
     assert isinstance(first, bytes)
     lg1, lg2 = hash_any([None, b"\xff\xfe", b"ok"])
     assert np.array_equal(lg1, ref1) and np.array_equal(lg2, ref2)
+
+
+def test_key_and_engine_layers_import_no_pandas():
+    """Keys enter the hash and sketch layers as Arrow, and the build
+    engine, probes and SQL functions run on Arrow: none of these modules
+    imports pandas."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parent.parent / "bloomfilter_spark"
+    files = [
+        pkg / "functions" / "hashing.py",
+        pkg / "functions" / "sqlapi.py",
+        *sorted((pkg / "sketches").glob("*.py")),
+        *(pkg / "operators" / f for f in
+          ("pipeline.py", "build.py", "membership.py", "partitioned.py")),
+    ]
+    offenders = []
+    for f in files:
+        for node in ast.walk(ast.parse(f.read_text(), filename=str(f))):
+            if isinstance(node, ast.Import):
+                names = [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom):
+                names = [node.module or ""]
+            else:
+                continue
+            if any(n == "pandas" or n.startswith("pandas.") for n in names):
+                offenders.append(f"{f.relative_to(pkg)}:{node.lineno}")
+    assert len(files) > 10 and not offenders, offenders

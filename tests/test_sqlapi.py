@@ -174,10 +174,30 @@ def test_sketch_merge_mixed_kinds_raises(spark):
     b.update(pd.Series(["a"]))
     pdf = pd.DataFrame({"g": [1, 1], "blob": [h.to_bytes(), b.to_bytes()]})
     spark.createDataFrame(pdf).createOrReplaceTempView("merge_mixed")
-    with pytest.raises(Exception):
+    with pytest.raises(Exception, match="(?s)(?=.*HyperLogLog)(?=.*BloomFilter)"):
         spark.sql(
             "SELECT g, sketch_merge(blob) FROM merge_mixed GROUP BY g"
         ).collect()
+
+
+def test_merge_sorted_mixed_kinds_raises_naming_both():
+    """The one merge rule refuses a blob of another kind with a ValueError
+    naming both kinds, whichever kind sorts first, before any per-kind
+    geometry check reads a field the other kind lacks."""
+    h = HyperLogLog(p=12)
+    h.update(["a"])
+    b = BloomFilter.create(10, 0.01)
+    b.update(["a"])
+    c = CountMinSketch.create(0.01, 0.01)
+    c.update(["a"])
+    k = KLLSketch(k=16)
+    k.update(np.array([1.0, 2.0]))
+    for x, y in ((h, b), (c, k)):
+        for first, second in ((x, y), (y, x)):
+            tbl = pa.table({"blob": [first.to_bytes(), second.to_bytes()]})
+            names = f"(?=.*{type(x).__name__})(?=.*{type(y).__name__})"
+            with pytest.raises(ValueError, match=names):
+                _merge_sorted(tbl, ["blob"], {"blob": first.empty_like})
 
 
 def test_sketch_merge_layout_independent(spark):
